@@ -5,10 +5,6 @@ functions — no Python UDFs) with an exactly-matching DuckDB SQL template, so
 dedup/text operators are oracle-checkable: the polynomial char hash folds
 left-to-right with the same modular arithmetic in both engines (verified
 bit-identical).
-
-For production scale the engine swaps the polynomial hash for xxhash64
-(Spark built-in, ~10× faster); the deterministic variant exists so
-correctness is provable against an independent engine.
 """
 
 from __future__ import annotations
@@ -72,20 +68,9 @@ def _char_polyhash_sql(var: str) -> str:
 CHAR_POLYHASH_SQL = _char_polyhash_sql  # callable template
 
 
-def token_hashes(text: Column, fast: bool = False) -> Column:
-    """array<long> of per-token hashes. fast=True → xxhash64 (engine path,
-    not oracle-matched); fast=False → polynomial (oracle-matched)."""
-    toks = tokens(text)
-    if fast:
-        return F.transform(toks, lambda t: F.xxhash64(t))
-    return F.transform(toks, char_polyhash)
-
-
-def TOKEN_HASHES_SQL(text: str) -> str:
-    return (
-        f"list_transform({TOKENS_SQL.format(text=text)}, "
-        f"t -> {_char_polyhash_sql('t')})"
-    )
+def token_hashes(text: Column) -> Column:
+    """array<long> of per-token polynomial hashes (oracle-matched)."""
+    return F.transform(tokens(text), char_polyhash)
 
 
 def shingles(text: Column, k: int = 3) -> Column:
@@ -138,9 +123,6 @@ def SHINGLES_SQL(toks_col: str, k: int = 3) -> str:
     )
 
 
-def shingle_hashes(text: Column, k: int = 3, fast: bool = False) -> Column:
+def shingle_hashes(text: Column, k: int = 3) -> Column:
     """array<long> of hashed distinct word k-grams."""
-    sh = shingles(text, k)
-    if fast:
-        return F.transform(sh, lambda s: F.xxhash64(s))
-    return F.transform(sh, char_polyhash)
+    return F.transform(shingles(text, k), char_polyhash)

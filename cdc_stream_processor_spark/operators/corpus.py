@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from cdc_stream_processor_spark.functions import texthash as TH
 from cdc_stream_processor_spark.operators.similarity import as_double
-from cdc_stream_processor_spark.plans.layout import ensure_parallelism
+from cdc_stream_processor_spark.plans.layout import cache_by_key, ensure_parallelism
 
 # LCG for the split key: u = ((id*A + B) mod P) / P ∈ [0, 1). The same
 # constants round-trip exactly through DuckDB BIGINT arithmetic (cf. the
@@ -100,7 +100,6 @@ def decontaminate(
     id_col: str = "doc_id",
     k: int = 3,
     min_overlap: int = 5,
-    fast: bool = False,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Word k-gram overlap between corpus documents and a benchmark set.
@@ -119,25 +118,16 @@ def decontaminate(
     docs would otherwise match nearly every corpus doc and explode the
     join output by |benchmark| per corpus doc.
     """
-    def index(df: DataFrame, out_id: str) -> DataFrame:
-        if fast:
-            # xxhash64 runs JVM-side in codegen — already the fast path
-            hs = TH.shingle_hashes(F.col(text_col), k=k, fast=True)
-            sig = (
-                ensure_parallelism(df)
-                .select(F.col(id_col).alias("doc_id"), hs.alias("hs"))
-                .filter(F.size("hs") > 0)
-            )
-        else:
-            # deterministic polynomial hash: the interpreted Catalyst fold is
-            # ~10x slower than its numpy twin, so hash in one Arrow pass
-            # (bit-identical values — same kernel the MinHash path uses)
-            from cdc_stream_processor_spark.operators.dedup import (
-                _vectorized_signatures,
-            )
+    from cdc_stream_processor_spark.operators.dedup import (
+        _vectorized_signatures,
+    )
 
-            sig = _vectorized_signatures(df, text_col, id_col, k=k,
-                                         with_minhash=False)
+    def index(df: DataFrame, out_id: str) -> DataFrame:
+        # the interpreted Catalyst hash fold is ~10x slower than its numpy
+        # twin, so hash in one Arrow pass (bit-identical values — same
+        # kernel the MinHash path uses)
+        sig = _vectorized_signatures(df, text_col, id_col, k=k,
+                                     with_minhash=False)
         return sig.select(F.col("doc_id").alias(out_id), F.explode("hs").alias("h"))
 
     corp = index(corpus, "doc_id")
@@ -1354,15 +1344,9 @@ def max_coverage_sample(
     # jobs — one corpus-scale shuffle up front replaces k of them.
     # (ensure_parallelism's keyless round-robin gave the same local
     # parallelism but left every round paying the groupBy shuffle.)
-    spark_parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    dt = (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-        .repartition(spark_parallelism, F.col("doc_id"))
-        .select(
-            F.col("doc_id"),
-            F.explode(units).alias("tok"),
-        )
-        .persist()
+    dt = cache_by_key(
+        docs.select(F.col(id_col).alias("doc_id"), F.explode(units).alias("tok")),
+        "doc_id",
     )
     try:
         chosen: list[tuple[int, int, int, int]] = []

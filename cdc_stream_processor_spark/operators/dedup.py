@@ -17,9 +17,9 @@ Four families, all shuffle-disciplined for 100 TB:
 - ngram_jaccard_pairs: inverted-index candidate join on shared shingle hash
                     (rarest-first cap optional) → exact Jaccard.
 
-All hashing is JVM-side higher-order array expressions (no Python UDFs); the
-deterministic polynomial variant is oracle-checkable against DuckDB, and
-fast=True switches to xxhash64 for production throughput.
+All hashing is JVM-side higher-order array expressions (no Python UDFs) or
+their bit-identical numpy twins; the polynomial hash is oracle-checkable
+against DuckDB.
 """
 
 from __future__ import annotations
@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdc_stream_processor_spark.functions import texthash as TH
-from cdc_stream_processor_spark.plans.layout import ensure_parallelism
+from cdc_stream_processor_spark.operators.memo import memoized
+from cdc_stream_processor_spark.plans.layout import cache_by_key, ensure_parallelism
 
 N_MINHASH = 32
 N_BANDS = 8  # 4 rows/band
@@ -43,42 +44,8 @@ _SHINGLE_SCHEMA = "doc_id long, hs array<long>"
 _SIMHASH_SCHEMA = "doc_id long, simhash long"
 
 
+@memoized
 def _vectorized_signatures(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    with_minhash: bool = True,
-) -> DataFrame:
-    """Memoized wrapper: the shingle/minhash signature table is the shared
-    first stage of the whole near-dup family (MinHash-LSH, n-gram Jaccard,
-    containment, Bloom/exact decontamination) on the same corpus —
-    deterministic by the kernel's bit-parity contract, so a process-level
-    memo hit (operators.memo) is identical to a recompute."""
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
-
-    key = (
-        "vectorized_signatures",
-        docs.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(docs),
-        text_col,
-        id_col,
-        k,
-        with_minhash,
-    )
-
-    def build() -> tuple[DataFrame, ...]:
-        return (
-            _vectorized_signatures_impl(docs, text_col, id_col, k, with_minhash),
-        )
-
-    return df_memo(key, build)[0]
-
-
-def _vectorized_signatures_impl(
     docs: DataFrame,
     text_col: str,
     id_col: str,
@@ -87,7 +54,11 @@ def _vectorized_signatures_impl(
 ) -> DataFrame:
     """(doc_id, hs[, mh]) via one Arrow-batched mapInPandas pass — numpy
     twins of the Catalyst folds (functions.fasthash), bit-identical values.
-    Docs with no shingles are dropped (as the fold path's size>0 filter)."""
+    Docs with no shingles are dropped (as the fold path's size>0 filter).
+
+    Memoized: the signature table is the shared first stage of the whole
+    near-dup family (MinHash-LSH, n-gram Jaccard, containment, Bloom/exact
+    decontamination) on the same corpus."""
     import numpy as np
 
     from cdc_stream_processor_spark.functions import fasthash as FH
@@ -154,21 +125,20 @@ def _minhash_params(i: int) -> tuple[int, int]:
 
 
 def minhashes(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              fast: bool = False, vectorized: bool = True) -> DataFrame:
+              vectorized: bool = True) -> DataFrame:
     """doc_id, shingle-hash array, array of N_MINHASH minhash values.
 
     vectorized=True (default) computes the identical values through the
     numpy kernels (one Arrow pass); False keeps the pure-Catalyst fold form.
     """
-    if vectorized and not fast:
+    if vectorized:
         return _vectorized_signatures(docs, text_col, id_col, k=3, with_minhash=True)
     docs = ensure_parallelism(docs)  # small-file scans must not serialize hashing
-    hs = TH.shingle_hashes(F.col(text_col), k=3, fast=fast)
+    hs = TH.shingle_hashes(F.col(text_col), k=3)
 
     def _perm(a: int, b: int):
-        # pmod first: identity for the polynomial hash (already < P), and it
-        # folds full-range xxhash64 values into [0, P) so a*x can't overflow
-        return lambda x: (F.lit(a) * F.pmod(x, F.lit(TH.P_MOD)) + F.lit(b)) % TH.P_MOD
+        # hashes are already in [0, P), so a*x cannot overflow a long
+        return lambda x: (F.lit(a) * x + F.lit(b)) % TH.P_MOD
 
     mh = F.array(
         *[
@@ -208,7 +178,6 @@ def minhash_scored_candidates(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast: bool = False,
 ) -> DataFrame:
     """Every LSH candidate pair (≥1 shared band) with its EXACT Jaccard —
     the scored candidate set behind near-dup detection (≥ threshold) and
@@ -218,7 +187,7 @@ def minhash_scored_candidates(
     # plus the verification join — without it the (expensive) hashing subplan
     # is recomputed once per branch. At cluster scale this is the standard
     # "materialize the signature table" step of a MinHash pipeline.
-    mh = minhashes(docs, text_col, id_col, fast=fast).persist()
+    mh = minhashes(docs, text_col, id_col).persist()
     bands = _band_rows(mh)
     cand = (
         bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
@@ -249,11 +218,10 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    fast: bool = False,
 ) -> DataFrame:
     """Candidate pairs sharing ≥1 LSH band, verified by exact Jaccard ≥
     threshold on the shingle sets. Returns (doc_a, doc_b, jaccard)."""
-    return minhash_scored_candidates(docs, text_col, id_col, fast=fast).filter(
+    return minhash_scored_candidates(docs, text_col, id_col).filter(
         F.col("jaccard") >= threshold
     )
 
@@ -264,7 +232,6 @@ def incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    fast: bool = False,
 ) -> DataFrame:
     """Admit/reject a NEW batch against an EXISTING corpus — the daily-ingest
     shape of fuzzy dedup. A new doc is rejected when it is a verified
@@ -278,8 +245,8 @@ def incremental_dedup(
     of history. Returns (doc_id, n_dups, keep) for every new doc with a
     non-empty shingle set.
     """
-    mh_new = minhashes(new_docs, text_col, id_col, fast=fast).persist()
-    mh_old = minhashes(corpus, text_col, id_col, fast=fast).persist()
+    mh_new = minhashes(new_docs, text_col, id_col).persist()
+    mh_old = minhashes(corpus, text_col, id_col).persist()
     bn = _band_rows(mh_new)
     bo = _band_rows(mh_old)
     cross = bn.select(F.col("doc_id").alias("new_id"), "band_idx", "band_hash").join(
@@ -326,10 +293,10 @@ def incremental_dedup(
 
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            fast: bool = False, vectorized: bool = True) -> DataFrame:
+            vectorized: bool = True) -> DataFrame:
     """32-bit SimHash over token hashes (frequency-weighted). Returns
     (doc_id, simhash:long)."""
-    if vectorized and not fast:
+    if vectorized:
         import numpy as np
 
         from cdc_stream_processor_spark.functions import fasthash as FH
@@ -364,7 +331,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         cols = docs.select(id_col, text_col)
         return ensure_parallelism(cols).mapInPandas(compute, schema=_SIMHASH_SCHEMA)
 
-    hs = TH.token_hashes(F.col(text_col), fast=fast)
+    hs = TH.token_hashes(F.col(text_col))
     base = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc_id"), hs.alias("hs")
     ).filter(F.size("hs") > 0)
@@ -390,7 +357,6 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 4,
-    fast: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming.
 
@@ -400,7 +366,7 @@ def simhash_pairs(
     """
     assert max_hamming < SIMHASH_BANDS, "pigeonhole guarantee violated"
     # persist: the 32-fold fingerprint subplan feeds both join sides
-    fps = simhash(docs, text_col, id_col, fast=fast).persist()
+    fps = simhash(docs, text_col, id_col).persist()
     width = SIMHASH_BITS // SIMHASH_BANDS
     bands = fps.select(
         "doc_id",
@@ -455,7 +421,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    fast: bool = False,
     vectorized: bool = True,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
@@ -472,12 +437,12 @@ def ngram_jaccard_pairs(
     unaffected; only pairs whose entire overlap is hot shingles can be
     missed — such pairs are overwhelmingly below any useful threshold.
     None (default) keeps the fully exact count-based path."""
-    if vectorized and not fast:
+    if vectorized:
         base = _vectorized_signatures(
             docs, text_col, id_col, k=3, with_minhash=False
         ).persist()
     else:
-        hs = TH.shingle_hashes(F.col(text_col), k=3, fast=fast)
+        hs = TH.shingle_hashes(F.col(text_col), k=3)
         # persist: base feeds the inverted index AND the two size joins
         base = (
             ensure_parallelism(docs)
@@ -491,13 +456,7 @@ def ngram_jaccard_pairs(
     # at runtime (exprId re-aliasing defeats ReuseExchange), so caching
     # it already h-partitioned removes two corpus-scale exchanges for one
     # at build — the winnowing_overlap_pairs pattern.
-    inv = (
-        base.select("doc_id", F.explode("hs").alias("h"))
-        .repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, F.col("h")
-        )
-        .persist()
-    )
+    inv = cache_by_key(base.select("doc_id", F.explode("hs").alias("h")), "h")
     if max_shingle_df is not None:
         hot = (
             inv.groupBy("h")
@@ -724,7 +683,6 @@ def minhash_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    fast: bool = False,
 ) -> DataFrame:
     """Corpus-level fuzzy dedup, end to end: MinHash-LSH pairs → connected
     components → drop every non-representative cluster member (keep the
@@ -732,7 +690,7 @@ def minhash_dedup(
 
     The drop-list is tiny relative to the corpus (only clustered dup members),
     so the final left_anti join broadcasts at any realistic dup rate."""
-    pairs = minhash_lsh_pairs(docs, text_col, id_col, threshold, fast)
+    pairs = minhash_lsh_pairs(docs, text_col, id_col, threshold)
     cc = connected_components(pairs)
     drop = cc.filter(F.col("id") != F.col("rep")).select(F.col("id").alias(id_col))
     return docs.join(drop, id_col, "left_anti")
@@ -744,7 +702,6 @@ def contrastive_triplets(
     neg_threshold: float = 0.2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast: bool = False,
 ) -> DataFrame:
     """(anchor, positive, hard_negative) training triplets for embedding-
     model fine-tuning, mined from the MinHash-LSH candidate structure:
@@ -758,9 +715,7 @@ def contrastive_triplets(
     tie-breaks — associative reductions, one groupBy, no window. Only
     anchors having both a positive and a hard negative emit a triplet.
     """
-    scored = minhash_scored_candidates(
-        docs, text_col, id_col, fast=fast
-    ).persist()
+    scored = minhash_scored_candidates(docs, text_col, id_col).persist()
     both = scored.select(
         F.col("doc_a").alias("anchor"), F.col("doc_b").alias("other"), "jaccard"
     ).union(
@@ -813,7 +768,6 @@ def containment_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = CONTAINMENT_TAU,
-    fast: bool = False,
 ) -> DataFrame:
     """Directional shingle containment C(A→B) = |S(A) ∩ S(B)| / |S(A)|:
     the asymmetric near-dup signal Jaccard misses when one document quotes
@@ -828,7 +782,7 @@ def containment_pairs(
     no second join).  Emits (doc_a, doc_b, containment) for every ordered
     pair clearing the threshold.
     """
-    hs = TH.shingle_hashes(F.col(text_col), k=3, fast=fast)
+    hs = TH.shingle_hashes(F.col(text_col), k=3)
     base = (
         ensure_parallelism(docs)
         .select(F.col(id_col).alias("doc_id"), hs.alias("hs"))
@@ -838,13 +792,7 @@ def containment_pairs(
     sizes = base.select("doc_id", F.size("hs").alias("n"))
     # h-partitioned cache: both self-join aliases read the cached layout
     # instead of re-exchanging by h (r13 — same as ngram_jaccard_pairs)
-    inv = (
-        base.select("doc_id", F.explode("hs").alias("h"))
-        .repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, F.col("h")
-        )
-        .persist()
-    )
+    inv = cache_by_key(base.select("doc_id", F.explode("hs").alias("h")), "h")
     shared = (
         inv.alias("a")
         .join(inv.alias("b"), "h")
@@ -887,7 +835,6 @@ def minhash_estimate_vs_exact(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast: bool = False,
 ) -> DataFrame:
     """MinHash estimator calibration: for every LSH candidate pair (≥1
     shared band, i.e. the pairs the banded index would actually surface),
@@ -904,7 +851,7 @@ def minhash_estimate_vs_exact(
     verification joins) plus one map-side zip over the 32-element
     signature arrays — candidates, never the corpus, pay it.
     """
-    mh = minhashes(docs, text_col, id_col, fast=fast).persist()
+    mh = minhashes(docs, text_col, id_col).persist()
     bands = _band_rows(mh)
     cand = (
         bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")

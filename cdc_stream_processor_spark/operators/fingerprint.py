@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from cdc_stream_processor_spark.functions.fasthash import rolling_horner_batch
 from cdc_stream_processor_spark.functions.texthash import P_FACTOR, P_MOD
-from cdc_stream_processor_spark.plans.layout import ensure_parallelism
+from cdc_stream_processor_spark.plans.layout import cache_by_key, ensure_parallelism
 
 # LRS is reported as the largest ladder scale it reaches (0 = below all).
 LRS_LADDER = (4, 8, 16, 32, 64)
@@ -303,11 +303,8 @@ def winnowing_overlap_pairs(
     # both sides on h, so a persisted HashPartitioning(h) makes all three
     # downstream exchanges vanish for the price of one up-front shuffle
     # (plan: per-query Exchange count 3 → 1 on this subtree).
-    spark_parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    fp = (
-        winnowing_fingerprints(docs, text_col, id_col, dedup_h=True)
-        .repartition(spark_parallelism, F.col("h"))
-        .persist()
+    fp = cache_by_key(
+        winnowing_fingerprints(docs, text_col, id_col, dedup_h=True), "h"
     )
     cold = (
         fp.groupBy("h")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_stream_processor_spark.operators.memo import memoized
+
 PR_SCALE = 1_000_000_000_000_000  # 1e15 fixed-point units of rank mass
 PR_DAMP_NUM = 85  # damping 0.85 as a ratio — kept integer
 PR_DAMP_DEN = 100
@@ -181,46 +183,8 @@ def triangle_counts(
     )
 
 
+@memoized
 def label_propagation(
-    edges: DataFrame,
-    n_rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """Memoized wrapper over the synchronous-LPA kernel: the community
-    table is the shared sub-result of `knn_communities` (which returns
-    it) and `community_conductance` (which scores it) on the same graph
-    — fully deterministic (min-tie synchronous rounds), so a memo hit is
-    bit-identical to a recompute (operators.memo, same pattern as the
-    memoized kNN graph both callers also share). Without the memo the
-    second caller re-runs the whole iterative loop: 3 joins + 6
-    aggregations + 3 eager checkpoints (r12 optimization).
-
-    Staleness hazard (memo.df_memo): the key fingerprints the logical
-    plan, not the bytes on disk — overwriting a fingerprinted input path
-    in the SAME process returns the old materialization; use a fresh
-    session after in-process rewrites."""
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
-
-    key = (
-        "label_propagation",
-        edges.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(edges),
-        n_rounds,
-        src_col,
-        dst_col,
-    )
-
-    def build() -> tuple[DataFrame, ...]:
-        return (_label_propagation_impl(edges, n_rounds, src_col, dst_col),)
-
-    return df_memo(key, build)[0]
-
-
-def _label_propagation_impl(
     edges: DataFrame,
     n_rounds: int = 3,
     src_col: str = "src",
@@ -247,6 +211,12 @@ def _label_propagation_impl(
     every round above its symmetrize+distinct shuffle.
 
     Returns (node, community) after n_rounds.
+
+    Memoized: the community table is the shared sub-result of
+    `knn_communities` (which returns it) and `community_conductance`
+    (which scores it) on the same graph. Without the memo the second
+    caller re-runs the whole iterative loop: 3 joins + 6 aggregations +
+    3 eager checkpoints (r12 optimization).
     """
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))

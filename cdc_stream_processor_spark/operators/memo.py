@@ -9,17 +9,25 @@ instead of recomputing — a memo hit is bit-identical to a recompute
 because every memoized builder is deterministic by the engine's oracle
 contract.
 
-Keys combine the Spark application id (a localCheckpointed RDD dies with
-its session), the exprId-normalized analyzed plan of each input (stable
-across re-derivations of the same logical query, distinct across
-different filters/paths), and the operator parameters.  Entries are
-localCheckpointed (eager, lineage-free) and the store is a small bounded
-FIFO — this is a latency cache for repeated in-process calls, not a
-table cache.
+Operators opt in with :func:`memoized`.  The key is the function, then
+every argument with defaults applied; a DataFrame argument stands for its
+session's application id (a localCheckpointed RDD dies with its session),
+its exprId-normalized analyzed plan (stable across re-derivations of the
+same logical query, distinct across different filters), and the (path,
+length, modification time) of every file it reads.  Guarantee: a hit
+happens only when the same function runs on the same logical plan over
+the same files with the same parameters, so rewriting an input path
+in-process rebuilds instead of returning the old result.
+
+Entries are localCheckpointed (eager, lineage-free) and the store is a
+small bounded FIFO — this is a latency cache for repeated in-process
+calls, not a table cache.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import re
 from collections.abc import Callable
 
@@ -46,6 +54,31 @@ def plan_fingerprint(df: DataFrame) -> str:
     return f"{stripped}|sh={df.semanticHash()}"
 
 
+def _input_files(df: DataFrame) -> tuple[tuple[str, int, int], ...]:
+    """(path, length, modification time) of every file ``df`` reads, via
+    the Hadoop FileSystem of each path's scheme.  The analyzed plan of a
+    file scan does not change when its files are overwritten; this does."""
+    spark = df.sparkSession
+    conf = spark._jsc.hadoopConfiguration()
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    out = []
+    for f in sorted(df.inputFiles()):
+        path = Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        out.append((f, st.getLen(), st.getModificationTime()))
+    return tuple(out)
+
+
+def _arg_key(value: object) -> object:
+    if isinstance(value, DataFrame):
+        return (
+            value.sparkSession.sparkContext.applicationId,
+            plan_fingerprint(value),
+            _input_files(value),
+        )
+    return value
+
+
 def df_memo(
     key: tuple,
     builder: Callable[[], tuple[DataFrame, ...]],
@@ -53,14 +86,7 @@ def df_memo(
     """Return the memoized (localCheckpointed) DataFrames for ``key``,
     building and materializing them on first call.  ``builder`` must be
     deterministic; it returns a tuple of DataFrames that are checkpointed
-    as the memo value.
-
-    Staleness hazard: the fingerprint covers the logical plan, NOT the
-    bytes on disk — if the files under a fingerprinted path are
-    OVERWRITTEN within the same process, a memo hit returns the old
-    materialization.  Callers that rewrite inputs in-process must use a
-    fresh session (app id is part of the key) or avoid the memo.
-    """
+    as the memo value."""
     hit = _MEMO.get(key)
     if hit is not None:
         return hit
@@ -76,3 +102,29 @@ def df_memo(
         _MEMO.pop(next(iter(_MEMO)))  # FIFO (dicts are insertion-ordered)
     _MEMO[key] = out
     return out
+
+
+def memoized(fn: Callable) -> Callable:
+    """Memoize a deterministic operator that returns one DataFrame or a
+    tuple of DataFrames (the caller gets the same shape back).  Every
+    argument must be a DataFrame or hashable; see the module docstring
+    for the key.  The undecorated function stays at ``__wrapped__``."""
+    sig = inspect.signature(fn)
+    name = f"{fn.__module__}.{fn.__qualname__}"
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        key = (name, *(_arg_key(v) for v in bound.arguments.values()))
+
+        def build() -> tuple[DataFrame, ...]:
+            out = fn(*bound.args, **bound.kwargs)
+            return out if isinstance(out, tuple) else (out,)
+
+        # looked up by module-global name on every call, so a wrapper
+        # installed over memo.df_memo (the benchmark's counter) sees it
+        out = df_memo(key, build)
+        return out[0] if len(out) == 1 else out
+
+    return wrapper

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdc_stream_processor_spark.operators.memo import memoized
 from cdc_stream_processor_spark.operators.relational import top_k_per_group
 from cdc_stream_processor_spark.plans.layout import ensure_parallelism
 
@@ -73,6 +74,7 @@ def _cosine_pandas_udf():
     return cos
 
 
+@memoized
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -80,47 +82,12 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Memoized wrapper over the exact top-k kernel: the brute-force
-    neighbor table is the shared sub-result of `cosine_topk` (which
-    returns it) and `ivf_recall_eval` (which uses it as ground truth) on
-    the identical query set — deterministic by the 6-dp fold parity, so
-    a memo hit is bit-identical to a recompute (operators.memo, same
-    pattern as the kNN graph; r12 optimization).
-
-    Staleness hazard (memo.df_memo): the key fingerprints the logical
-    plan, not the bytes on disk — overwriting a fingerprinted input path
-    in the SAME process returns the old materialization; use a fresh
-    session after in-process rewrites."""
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
-
-    key = (
-        "brute_force_topk",
-        queries.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(queries),
-        plan_fingerprint(corpus),
-        k,
-        id_col,
-        vec_col,
-    )
-
-    def build() -> tuple[DataFrame, ...]:
-        return (_brute_force_topk_impl(queries, corpus, k, id_col, vec_col),)
-
-    return df_memo(key, build)[0]
-
-
-def _brute_force_topk_impl(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
     """Exact top-k neighbors (query_id, neighbor_id, cosine_sim, rank);
-    self-matches excluded."""
+    self-matches excluded.
+
+    Memoized: the neighbor table is the shared sub-result of
+    `cosine_topk` (which returns it) and `ivf_recall_eval` (which uses it
+    as ground truth) on the identical query set (r12 optimization)."""
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
@@ -271,6 +238,7 @@ def cosine_pairs(
     )
 
 
+@memoized
 def lsh_near_dup_pairs(
     vecs: DataFrame,
     threshold: float,
@@ -307,50 +275,10 @@ def lsh_near_dup_pairs(
     cosine_pairs), so per-task memory stays O(block_size·d) at any
     corpus size; n_planes remains the candidate-volume knob.
 
-    Memoized per process (operators.memo): the pair table is the shared
-    sub-result of `embedding_near_dup_pairs` AND `embedding_near_dup`
-    (keep-first dedup), deterministic by the kernel's bit-parity
-    contract, and output-scale (≥-threshold pairs only) — the cheapest
+    Memoized: the pair table is the shared sub-result of
+    `embedding_near_dup_pairs` AND `embedding_near_dup` (keep-first
+    dedup), and output-scale (≥-threshold pairs only) — the cheapest
     thing in the operator to pin."""
-    import numpy as np
-
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
-
-    key = (
-        "lsh_near_dup_pairs",
-        vecs.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(vecs),
-        threshold,
-        dim,
-        id_col,
-        vec_col,
-        n_planes,
-        n_tables,
-        block_size,
-    )
-
-    def build() -> tuple[DataFrame, ...]:
-        return (_lsh_near_dup_pairs_impl(
-            vecs, threshold, dim, id_col, vec_col, n_planes, n_tables,
-            block_size,
-        ),)
-
-    return df_memo(key, build)[0]
-
-
-def _lsh_near_dup_pairs_impl(
-    vecs: DataFrame,
-    threshold: float,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    block_size: int,
-) -> DataFrame:
     import numpy as np
 
     n = vecs.count()
@@ -487,23 +415,6 @@ def _plane_weight_mixed(table: int, plane: int, dim: int) -> float:
     z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _M64
     z = z ^ (z >> 31)
     return z / 2.0**64 - 0.5
-
-
-def lsh_bucket(vec: Column, dim: int, table: int, n_planes: int = N_PLANES) -> Column:
-    """Bucket id from sign bits of n_planes deterministic hyperplanes."""
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        proj = _fold_sum(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(_plane_weight(table, p, d)) for d in range(dim)]),
-                lambda x, w: x * w,
-            )
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
 
 
 def _bucket_udf(dim: int, n_planes: int, n_tables: int, weight_fn=_plane_weight):
@@ -713,53 +624,8 @@ def _spherical_kmeans(sample, nlist: int, iters: int = 10):
     return cents
 
 
+@memoized
 def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = IVF_NLIST,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Memoized wrapper over the IVF-flat kernel: the probed neighbor
-    table is the shared sub-result of `ivf_ann_topk` (which returns it)
-    and `ivf_recall_eval` (which scores it against brute force) on the
-    identical query set — fully deterministic (k-means init = first
-    nlist rows by id, fixed iterations, sequential folds), so a memo hit
-    is bit-identical to a recompute; it also skips re-collecting the
-    driver-side training sample (operators.memo; r12 optimization).
-
-    Staleness hazard (memo.df_memo): the key fingerprints the logical
-    plan, not the bytes on disk — overwriting a fingerprinted input path
-    in the SAME process returns the old materialization; use a fresh
-    session after in-process rewrites."""
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
-
-    key = (
-        "ivf_topk",
-        queries.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(queries),
-        plan_fingerprint(corpus),
-        k,
-        id_col,
-        vec_col,
-        nlist,
-        nprobe,
-    )
-
-    def build() -> tuple[DataFrame, ...]:
-        return (
-            _ivf_topk_impl(queries, corpus, k, id_col, vec_col, nlist, nprobe),
-        )
-
-    return df_memo(key, build)[0]
-
-
-def _ivf_topk_impl(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
@@ -777,7 +643,12 @@ def _ivf_topk_impl(
     deterministic stand-in for reservoir sampling); cell assignment is one
     Arrow-batched matmul map over the corpus (no shuffle); the probe is an
     equi-join on cell id, so only ~nprobe/nlist of the corpus is scored per
-    query. Approximate — recall vs brute force is asserted in tests."""
+    query. Approximate — recall vs brute force is asserted in tests.
+
+    Memoized: the probed neighbor table is the shared sub-result of
+    `ivf_ann_topk` (which returns it) and `ivf_recall_eval` (which scores
+    it against brute force) on the identical query set; a hit also skips
+    re-collecting the driver-side training sample (r12 optimization)."""
     import numpy as np
     from pyspark.sql.pandas.functions import pandas_udf
 
@@ -926,40 +797,8 @@ def centroid_assign(
     )
 
 
+@memoized
 def knn_graph(
-    vecs: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_size: int = 4096,
-) -> DataFrame:
-    """Memoized wrapper over the exact kNN-graph kernel: the graph is the
-    shared sub-result of `knn_graph`, `knn_pagerank`, and `knn_triangles`
-    on the same corpus, fully deterministic by the kernel's 6-dp fold
-    parity — a memo hit is bit-identical to a recompute (operators.memo,
-    same pattern as the LSH near-dup pair table)."""
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
-
-    key = (
-        "knn_graph",
-        vecs.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(vecs),
-        k,
-        id_col,
-        vec_col,
-        block_size,
-    )
-
-    def build() -> tuple[DataFrame, ...]:
-        return (_knn_graph_impl(vecs, k, id_col, vec_col, block_size),)
-
-    return df_memo(key, build)[0]
-
-
-def _knn_graph_impl(
     vecs: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
@@ -986,7 +825,10 @@ def _knn_graph_impl(
     6-dp fold parity: near-boundary Gram entries are re-accumulated with
     the sequential fold (fasthash), so ROUND(·, 6) and hence the
     (cosine_sim DESC, neighbor_id ASC) ranking is bit-identical to the
-    DuckDB list_reduce oracle."""
+    DuckDB list_reduce oracle.
+
+    Memoized: the graph is the shared sub-result of `knn_graph`,
+    `knn_pagerank` and `knn_triangles` on the same corpus."""
     import numpy as np
 
     from cdc_stream_processor_spark.functions.fasthash import (
@@ -1582,6 +1424,7 @@ def _pq_subvectors(
     )
 
 
+@memoized
 def _pq_train(
     vecs: DataFrame,
     m: int,
@@ -1594,47 +1437,25 @@ def _pq_train(
     cluster, d), the centroid table the final assignment was scored
     against (sub, cluster, cv)).
 
-    Memoized per process (operators.memo): `pq_codes` and `pq_adc_topk`
-    train IDENTICAL codebooks on the identical corpus, and training is
-    fully deterministic (seeded init, grid-snapped means), so a memo hit
-    is bit-identical to a retrain."""
-    from cdc_stream_processor_spark.operators.memo import (
-        df_memo,
-        plan_fingerprint,
-    )
+    Memoized: `pq_codes` and `pq_adc_topk` train IDENTICAL codebooks on
+    the identical corpus (seeded init, grid-snapped means)."""
+    from pyspark.sql.window import Window
 
-    key = (
-        "pq_train",
-        vecs.sparkSession.sparkContext.applicationId,
-        plan_fingerprint(vecs),
-        m,
-        ksub,
-        iters,
-        id_col,
-        vec_col,
-    )
-
-    def build() -> tuple[DataFrame, DataFrame]:
-        v = _pq_subvectors(vecs, m, id_col, vec_col)
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("sub").orderBy("vec_id")
-        cents = (
-            v.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= ksub)
-            .select(
-                "sub",
-                (F.col("rn") - 1).cast("long").alias("cluster"),
-                F.col("v").alias("cv"),
-            )
+    v = _pq_subvectors(vecs, m, id_col, vec_col)
+    w = Window.partitionBy("sub").orderBy("vec_id")
+    cents = (
+        v.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= ksub)
+        .select(
+            "sub",
+            (F.col("rn") - 1).cast("long").alias("cluster"),
+            F.col("v").alias("cv"),
         )
+    )
+    assigned = _pq_assign(v, cents)
+    for _ in range(iters - 1):
+        cents = _pq_rebuild(assigned)
         assigned = _pq_assign(v, cents)
-        for _ in range(iters - 1):
-            cents = _pq_rebuild(assigned)
-            assigned = _pq_assign(v, cents)
-        return assigned, cents
-
-    assigned, cents = df_memo(key, build)
     return assigned, cents
 
 

@@ -94,11 +94,11 @@ def quality_score(text: Column) -> Column:
     )
 
 
-def doc_fingerprint(text: Column, fast: bool = False) -> Column:
+def doc_fingerprint(text: Column) -> Column:
     """Order-sensitive rolling hash over token hashes:
     fold (acc * 1000003 + h) % (2^31 - 1). Near-identical prefixes share
     fingerprint prefixes; exact duplicates collide exactly."""
-    hs = TH.token_hashes(text, fast=fast)
+    hs = TH.token_hashes(text)
     return F.aggregate(
         hs,
         F.lit(0).cast("long"),

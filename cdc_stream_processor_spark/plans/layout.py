@@ -6,6 +6,9 @@ single core regardless of cluster size. `ensure_parallelism` round-robins the
 input across the default parallelism when — and only when — the scan is
 under-partitioned; at real scale (thousands of input splits) it's a no-op, so
 the same operator code is correct at sf0.001 and at 100 TB.
+
+`cache_by_key` is the one place that decides how a shared intermediate is
+laid out before it is cached for consumers keyed on the same columns.
 """
 
 from __future__ import annotations
@@ -42,6 +45,20 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def cache_by_key(df: DataFrame, *keys: str | Column) -> DataFrame:
+    """Hash-partition ``df`` by ``keys`` into ``spark.sql.shuffle.partitions``
+    partitions and persist it.
+
+    Consumers that group or join on the keys (or on a superset of them)
+    then read the cached HashPartitioning without an Exchange: one shuffle
+    at build replaces one per consumer, and exprId re-aliasing in
+    self-joins cannot defeat it the way it defeats ReuseExchange.  The
+    count follows the session's shuffle setting, the same count the
+    consumers' own exchanges would use, not the core count."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys).persist()
 
 
 def write_date_partitioned(

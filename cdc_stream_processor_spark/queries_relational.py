@@ -1285,13 +1285,10 @@ def q_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caching the index already hr-partitioned removes three downstream
     # exchanges of the corpus-scale index for one at build; only the
     # per-user size agg still reshuffles (user_id key).
-    hrs = (
+    hrs = L.cache_by_key(
         ev.select("user_id", F.date_trunc("hour", F.col("ts")).alias("hr"))
-        .distinct()
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("hr")
-        )
-        .persist()
+        .distinct(),
+        "hr",
     )
     sizes = hrs.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     # per-hour density → chunk count (hours are bounded — a year is 8760

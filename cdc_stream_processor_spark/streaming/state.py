@@ -42,11 +42,17 @@ OUTPUT_SCHEMA = T.StructType(
 STATE_SCHEMA = T.StructType([T.StructField("last_balance", T.DoubleType())])
 
 
-def _reconcile_rows(
-    account_id, rows: pd.DataFrame, last
-) -> tuple[list[dict[str, Any]], Any]:
-    """Shared reconciliation kernel (both stateful APIs): fold the batch in
-    (initiated_at, transaction_id) order against the stored balance."""
+def _reconcile_group(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Per-account reconciliation over one micro-batch (rows may span
+    multiple Arrow chunks): fold the rows in (initiated_at,
+    transaction_id) order against the stored balance."""
+    (account_id,) = key
+    last = state.get[0] if state.exists else None
+    rows = pd.concat(list(batches), ignore_index=True)
     rows = rows.sort_values(["initiated_at", "transaction_id"])
     out: list[dict[str, Any]] = []
     for r in rows.itertuples(index=False):
@@ -63,20 +69,6 @@ def _reconcile_rows(
             }
         )
         last = r.balance_after  # store := BALANCE_AFTER (reference :89)
-    return out, last
-
-
-def _reconcile_group(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-account reconciliation over one micro-batch (rows may span
-    multiple Arrow chunks; ordered by event time within the group)."""
-    (account_id,) = key
-    last = state.get[0] if state.exists else None
-    rows = pd.concat(list(batches), ignore_index=True)
-    out, last = _reconcile_rows(account_id, rows, last)
     state.update((last,))
     yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
 
@@ -106,47 +98,4 @@ def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def balance_reconciliation_tws(txns: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` form of the same operator —
-    the successor stateful API (typed per-key value state via a
-    StatefulProcessor, RocksDB-provider-backed), mirroring the reference's
-    Processor-API node one-to-one: init = open store handle
-    (BalanceReconciliationProcessor.java:50-55), handleInputRows = process()
-    loop (:62-125), value state = the changelog-backed KV store (:71,89).
-
-    Requires spark.sql.streaming.stateStore.providerClass = RocksDB (the
-    API's documented requirement) and the ``protobuf`` Python package (the
-    state-server wire protocol — absent on minimal installs, so the test is
-    importorskip-gated); balance_reconciliation_stream remains the
-    provider-agnostic twin. Identical output contract (OUTPUT_SCHEMA)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _BalanceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_balance", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (account_id,) = key
-            last = self._last.get()[0] if self._last.exists() else None
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out, last = _reconcile_rows(account_id, pdf, last)
-            self._last.update((last,))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in OUTPUT_SCHEMA.fields]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _eligible(txns).groupBy("account_id").transformWithStateInPandas(
-        _BalanceProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )

@@ -446,19 +446,6 @@ def test_shingles_fold_path_survives_short_docs(spark):
     }
     assert jac == {(5, 6): 1.0}
 
-    # decontaminate fast=True (xxhash64 over the same shingles expression)
-    bench = spark.createDataFrame(
-        [(100, "one two three four five"), (101, "zz")],
-        "doc_id long, text string",
-    )
-    dec = {
-        (r.doc_id, r.bench_id): r.shared_shingles
-        for r in C.decontaminate(
-            docs, bench, fast=True, min_overlap=2
-        ).collect()
-    }
-    assert dec == {(5, 100): 3, (6, 100): 3}
-
 
 def test_rp_project_survives_empty_vectors(spark):
     """Regression (same sequence-reversal class as shingles): an empty

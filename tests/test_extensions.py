@@ -42,18 +42,6 @@ def test_minhash_finds_planted_near_dup(spark):
     assert pairs[0].jaccard > 0.8
 
 
-def test_minhash_fast_path_agrees_with_slow(spark, sf_dir):
-    docs = B.load_table(spark, sf_dir, "documents")
-    slow = {
-        (r.doc_a, r.doc_b) for r in D.minhash_lsh_pairs(docs, fast=False).collect()
-    }
-    fast = {
-        (r.doc_a, r.doc_b) for r in D.minhash_lsh_pairs(docs, fast=True).collect()
-    }
-    # exact Jaccard verification makes both hash families converge
-    assert slow == fast
-
-
 def test_simhash_identical_docs_equal_fp(spark):
     docs = _docs(spark, [(1, "alpha beta gamma"), (2, "alpha beta gamma")])
     fps = [r.simhash for r in D.simhash(docs).collect()]
@@ -1541,6 +1529,52 @@ def test_df_memo_distinguishes_inputs_params_and_hits(spark):
     assert calls == ["a", "b", "a-p2"]  # hit did not rebuild
     assert ra is ra_hit
     assert {r.v for r in ra.collect()} == {r.v for r in rb.collect()}
+
+
+def test_memoized_rebuilds_after_input_overwrite(spark, tmp_path, monkeypatch):
+    """Overwriting a memoized operator's input path in the same session
+    leaves the analyzed plan unchanged; the input-file part of the key
+    must still force a rebuild, so the second call sees the new rows."""
+    from cdc_stream_processor_spark.operators import memo as M
+
+    monkeypatch.setattr(M, "_MEMO", {})
+    path = str(tmp_path / "docs")
+    _docs(spark, [(1, "a b c d"), (2, "e f g h")]).write.parquet(path)
+    first = {r.doc_id for r in D.minhashes(spark.read.parquet(path)).collect()}
+    assert first == {1, 2}
+    _docs(
+        spark, [(7, "a b c d"), (8, "e f g h"), (9, "i j k l")]
+    ).write.mode("overwrite").parquet(path)
+    again = {r.doc_id for r in D.minhashes(spark.read.parquet(path)).collect()}
+    assert again == {7, 8, 9}
+
+
+def test_memoized_routes_through_df_memo(spark, monkeypatch):
+    """Decorated operators must store and look up through the module-level
+    ``memo.df_memo``: the benchmark counts memo calls and builds by
+    replacing that attribute, and would silently read 0 otherwise."""
+    from cdc_stream_processor_spark.operators import memo as M
+    from cdc_stream_processor_spark.operators.graph import label_propagation
+
+    monkeypatch.setattr(M, "_MEMO", {})
+    orig = M.df_memo
+    calls, builds = [], []
+
+    def counting(key, builder):
+        calls.append(key)
+
+        def counted():
+            builds.append(key)
+            return builder()
+
+        return orig(key, counted)
+
+    monkeypatch.setattr(M, "df_memo", counting)
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    first = label_propagation(edges, n_rounds=2)
+    again = label_propagation(edges, n_rounds=2)
+    assert (len(calls), len(builds)) == (2, 1)
+    assert again is first
 
 
 def test_top_k_per_group_tie_break_and_plan(spark):

@@ -494,9 +494,9 @@ def test_knn_graph_plan_blocked_kernel_no_driver_collect(spark, sf_dir):
     from cdc_stream_processor_spark.operators import similarity as S
     from cdc_stream_processor_spark.sources import batch as B
 
-    # inspect the kernel impl directly: the public knn_graph wrapper memoizes
-    # via localCheckpoint, which truncates the inspectable lineage
-    df = S._knn_graph_impl(
+    # inspect the undecorated kernel: the memoized knn_graph returns a
+    # localCheckpoint, which truncates the inspectable lineage
+    df = S.knn_graph.__wrapped__(
         B.load_table(spark, sf_dir, "embeddings"), k=3, block_size=256
     )
     plan = _plan(df)
