@@ -8,6 +8,7 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -289,113 +290,34 @@ def _rotation_order(names: list[str]) -> list[str]:
     return sorted(names, key=lambda n: (last_green.get(n, -1), idx[n]))
 
 
+# Every batch query module, in registration order. Each module's QUERIES
+# maps a query name to its (Spark query, DuckDB oracle SQL) pair. A module
+# that fails to import raises here instead of dropping its queries.
+_QUERY_MODULES = (
+    "queries",
+    "queries_relational",
+    "queries_extensions",
+    "queries_corpus",
+    "queries_tpch",
+    "queries_curation",
+    "queries_retrieval",
+    "queries_linkage",
+    "queries_quality",
+)
+
+
+def _registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
+    table = {}
+    for module in _QUERY_MODULES:
+        qmod = importlib.import_module(f"cdc_stream_processor_spark.{module}")
+        table.update(qmod.QUERIES)
+    return table
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from cdc_stream_processor_spark import queries as Q
-
-    full: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    full.update(Q.CDC_QUERIES)
-    try:
-        from cdc_stream_processor_spark import queries_relational as QR
-
-        full.update(QR.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_extensions as QE
-
-        full.update(QE.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_corpus as QC
-
-        full.update(QC.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_tpch as QT
-
-        full.update(QT.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_curation as QU
-
-        full.update(QU.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_retrieval as QV
-
-        full.update(QV.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_linkage as QL
-
-        full.update(QL.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_quality as QQ
-
-        full.update(QQ.QUERIES)
-    except ImportError:
-        pass
-    return {name: full[name] for name in _rotation_order(list(full))}
+    table = _registry()
+    return {name: table[name][0] for name in _rotation_order(list(table))}
 
 
 def oracle_sql() -> dict[str, str]:
-    from cdc_stream_processor_spark import queries as Q
-
-    out: dict[str, str] = {}
-    out.update(Q.CDC_ORACLES)
-    try:
-        from cdc_stream_processor_spark import queries_relational as QR
-
-        out.update(QR.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_extensions as QE
-
-        out.update(QE.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_corpus as QC
-
-        out.update(QC.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_tpch as QT
-
-        out.update(QT.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_curation as QU
-
-        out.update(QU.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_retrieval as QV
-
-        out.update(QV.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_linkage as QL
-
-        out.update(QL.ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cdc_stream_processor_spark import queries_quality as QQ
-
-        out.update(QQ.ORACLES)
-    except ImportError:
-        pass
-    return out
+    return {name: sql for name, (_, sql) in _registry().items()}

@@ -57,15 +57,13 @@ def char_polyhash(s: Column) -> Column:
     )
 
 
-def _char_polyhash_sql(var: str) -> str:
+def char_polyhash_sql(var: str) -> str:
+    """DuckDB twin of ``char_polyhash`` over the SQL expression ``var``."""
     return (
         f"list_reduce(list_prepend(0::BIGINT, "
         f"list_transform(string_split({var}, ''), c -> ascii(c)::BIGINT)), "
         f"(acc, x) -> (acc * {P_FACTOR} + x) % {P_MOD})"
     )
-
-
-CHAR_POLYHASH_SQL = _char_polyhash_sql  # callable template
 
 
 def token_hashes(text: Column) -> Column:

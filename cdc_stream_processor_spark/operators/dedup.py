@@ -124,33 +124,12 @@ def _minhash_params(i: int) -> tuple[int, int]:
     return 37 + 2 * i, 101 + i * i
 
 
-def minhashes(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              vectorized: bool = True) -> DataFrame:
-    """doc_id, shingle-hash array, array of N_MINHASH minhash values.
-
-    vectorized=True (default) computes the identical values through the
-    numpy kernels (one Arrow pass); False keeps the pure-Catalyst fold form.
-    """
-    if vectorized:
-        return _vectorized_signatures(docs, text_col, id_col, k=3, with_minhash=True)
-    docs = ensure_parallelism(docs)  # small-file scans must not serialize hashing
-    hs = TH.shingle_hashes(F.col(text_col), k=3)
-
-    def _perm(a: int, b: int):
-        # hashes are already in [0, P), so a*x cannot overflow a long
-        return lambda x: (F.lit(a) * x + F.lit(b)) % TH.P_MOD
-
-    mh = F.array(
-        *[
-            F.array_min(F.transform(F.col("hs"), _perm(a, b)))
-            for a, b in (_minhash_params(i) for i in range(N_MINHASH))
-        ]
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), hs.alias("hs"))
-        .filter(F.size("hs") > 0)
-        .withColumn("mh", mh)
-    )
+def minhashes(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """doc_id, shingle-hash array, array of N_MINHASH minhash values, via
+    the numpy kernels (one Arrow pass)."""
+    return _vectorized_signatures(docs, text_col, id_col, k=3, with_minhash=True)
 
 
 def _band_rows(mh: DataFrame) -> DataFrame:
@@ -292,64 +271,42 @@ def incremental_dedup(
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            vectorized: bool = True) -> DataFrame:
+def simhash(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
     """32-bit SimHash over token hashes (frequency-weighted). Returns
     (doc_id, simhash:long)."""
-    if vectorized:
-        import numpy as np
+    import numpy as np
 
-        from cdc_stream_processor_spark.functions import fasthash as FH
+    from cdc_stream_processor_spark.functions import fasthash as FH
 
-        def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids: list[int] = []
-                all_toks: list[str] = []
-                lens: list[int] = []
-                for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = FH.tokens_py(text)
-                    if not toks:
-                        continue
-                    ids.append(doc_id)
-                    all_toks.extend(toks)
-                    lens.append(len(toks))
-                if ids:
-                    lens_arr = np.asarray(lens, dtype=np.int64)
-                    bounds = np.concatenate(([0], np.cumsum(lens_arr)[:-1]))
-                    fp = FH.simhash_batch(
-                        FH.polyhash_batch(all_toks), bounds, SIMHASH_BITS
-                    )
-                else:
-                    fp = []
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "simhash": pd.Series(fp, dtype="int64"),
-                    }
-                )
+    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids: list[int] = []
+            all_toks: list[str] = []
+            lens: list[int] = []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                toks = FH.tokens_py(text)
+                if not toks:
+                    continue
+                ids.append(doc_id)
+                all_toks.extend(toks)
+                lens.append(len(toks))
+            if ids:
+                lens_arr = np.asarray(lens, dtype=np.int64)
+                bounds = np.concatenate(([0], np.cumsum(lens_arr)[:-1]))
+                fp = FH.simhash_batch(FH.polyhash_batch(all_toks), bounds, SIMHASH_BITS)
+            else:
+                fp = []
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "simhash": pd.Series(fp, dtype="int64"),
+                }
+            )
 
-        cols = docs.select(id_col, text_col)
-        return ensure_parallelism(cols).mapInPandas(compute, schema=_SIMHASH_SCHEMA)
-
-    hs = TH.token_hashes(F.col(text_col))
-    base = ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"), hs.alias("hs")
-    ).filter(F.size("hs") > 0)
-    def _vote_fn(b: int):
-        return lambda acc, x: acc + F.when(
-            F.shiftright(x, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_terms = []
-    for b in range(SIMHASH_BITS):
-        vote = F.aggregate(F.col("hs"), F.lit(0).cast("long"), _vote_fn(b))
-        bit_terms.append(
-            F.when(vote > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    fp = bit_terms[0]
-    for t in bit_terms[1:]:
-        fp = fp + t
-    return base.select("doc_id", fp.alias("simhash"))
+    cols = docs.select(id_col, text_col)
+    return ensure_parallelism(cols).mapInPandas(compute, schema=_SIMHASH_SCHEMA)
 
 
 def simhash_pairs(
@@ -421,7 +378,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    vectorized: bool = True,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard via inverted index: explode shingle hashes,
@@ -437,19 +393,9 @@ def ngram_jaccard_pairs(
     unaffected; only pairs whose entire overlap is hot shingles can be
     missed — such pairs are overwhelmingly below any useful threshold.
     None (default) keeps the fully exact count-based path."""
-    if vectorized:
-        base = _vectorized_signatures(
-            docs, text_col, id_col, k=3, with_minhash=False
-        ).persist()
-    else:
-        hs = TH.shingle_hashes(F.col(text_col), k=3)
-        # persist: base feeds the inverted index AND the two size joins
-        base = (
-            ensure_parallelism(docs)
-            .select(F.col(id_col).alias("doc_id"), hs.alias("hs"))
-            .filter(F.size("hs") > 0)
-            .persist()
-        )
+    base = _vectorized_signatures(
+        docs, text_col, id_col, k=3, with_minhash=False
+    ).persist()
     sizes = base.select("doc_id", F.size("hs").alias("n"))
     # HASH-partition the exploded inverted index by h and cache it (r13,
     # guide §2.4): the self-join re-shuffles BOTH aliases of `inv` by h

@@ -160,6 +160,17 @@ class AuditFailure(RuntimeError):
     """A write-audit-publish validation rejected the staged data."""
 
 
+def restore_parked(path: str) -> None:
+    """Crash recovery for the publish swap: a publish dying between its two
+    renames leaves the published version parked at ``.__old__`` with no
+    live path. Move it back."""
+    import os
+
+    old = f"{path}.__old__"
+    if not os.path.isdir(path) and os.path.isdir(old):
+        os.rename(old, path)
+
+
 def publish_with_audit(
     df: DataFrame,
     path: str,
@@ -181,12 +192,8 @@ def publish_with_audit(
     import shutil
 
     spark = df.sparkSession
-    # crash recovery: a prior publish dying between its two renames leaves
-    # the published version parked at .__old__ with no live path — restore
-    # it so this publish swaps against the real previous version
-    old_dangling = f"{path}.__old__"
-    if not os.path.isdir(path) and os.path.isdir(old_dangling):
-        os.rename(old_dangling, path)
+    # swap against the real previous version, not a missing one
+    restore_parked(path)
     tmp = f"{path}.__stage__"
     df.write.mode("overwrite").parquet(tmp)
     staged = spark.read.parquet(tmp)

@@ -591,38 +591,23 @@ HAVING SUM(CAST(COALESCE(amount, 0) AS DECIMAL(18,4))) >= {DAILY_THRESHOLD}
 )
 
 
-CDC_QUERIES: dict[str, QueryFn] = {
-    "cdc_parse": q_cdc_parse,
-    "notifications_render": q_notifications_render,
-    "high_value_alerts": q_high_value,
-    "txn_velocity": q_velocity,
-    "daily_spend": q_daily_spend,
-    "dormancy": q_dormancy,
-    "balance_recon": q_balance_recon,
-    "latest_event_per_user": q_latest_event_per_user,
-    "retraction_aggregate": q_retraction_aggregate,
-    "user_state_diff": q_user_state_diff,
-    "scd2_user_history": q_scd2_user_history,
-    "point_in_time_user_state": q_point_in_time_user_state,
-    "cdc_apply_changes": q_cdc_apply_changes,
-    "high_value_enriched": q_high_value_enriched,
-    "daily_spend_render": q_daily_spend_render,
-}
-
-CDC_ORACLES: dict[str, str] = {
-    "cdc_parse": SQL_CDC_PARSE,
-    "notifications_render": SQL_NOTIFICATIONS_RENDER,
-    "high_value_alerts": SQL_HIGH_VALUE,
-    "txn_velocity": SQL_VELOCITY,
-    "daily_spend": SQL_DAILY_SPEND,
-    "dormancy": SQL_DORMANCY,
-    "balance_recon": SQL_BALANCE_RECON,
-    "latest_event_per_user": SQL_LATEST_EVENT_PER_USER,
-    "retraction_aggregate": SQL_RETRACTION_AGGREGATE,
-    "user_state_diff": SQL_USER_STATE_DIFF,
-    "scd2_user_history": SQL_SCD2_USER_HISTORY,
-    "point_in_time_user_state": SQL_POINT_IN_TIME_USER_STATE,
-    "cdc_apply_changes": SQL_CDC_APPLY_CHANGES,
-    "high_value_enriched": SQL_HIGH_VALUE_ENRICHED,
-    "daily_spend_render": SQL_DAILY_SPEND_RENDER,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "cdc_parse": (q_cdc_parse, SQL_CDC_PARSE),
+    "notifications_render": (q_notifications_render, SQL_NOTIFICATIONS_RENDER),
+    "high_value_alerts": (q_high_value, SQL_HIGH_VALUE),
+    "txn_velocity": (q_velocity, SQL_VELOCITY),
+    "daily_spend": (q_daily_spend, SQL_DAILY_SPEND),
+    "dormancy": (q_dormancy, SQL_DORMANCY),
+    "balance_recon": (q_balance_recon, SQL_BALANCE_RECON),
+    "latest_event_per_user": (q_latest_event_per_user, SQL_LATEST_EVENT_PER_USER),
+    "retraction_aggregate": (q_retraction_aggregate, SQL_RETRACTION_AGGREGATE),
+    "user_state_diff": (q_user_state_diff, SQL_USER_STATE_DIFF),
+    "scd2_user_history": (q_scd2_user_history, SQL_SCD2_USER_HISTORY),
+    "point_in_time_user_state": (
+        q_point_in_time_user_state,
+        SQL_POINT_IN_TIME_USER_STATE,
+    ),
+    "cdc_apply_changes": (q_cdc_apply_changes, SQL_CDC_APPLY_CHANGES),
+    "high_value_enriched": (q_high_value_enriched, SQL_HIGH_VALUE_ENRICHED),
+    "daily_spend_render": (q_daily_spend_render, SQL_DAILY_SPEND_RENDER),
 }

@@ -18,6 +18,7 @@ from cdc_stream_processor_spark.functions import texthash as TH
 from cdc_stream_processor_spark.operators import corpus as C
 from cdc_stream_processor_spark.operators import frequency as FR
 from cdc_stream_processor_spark.operators import text as T
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.queries_extensions import DOCS_CTE
 from cdc_stream_processor_spark.sources import batch as B
 
@@ -1086,7 +1087,7 @@ WITH toks AS (
   SELECT doc_id,
          h % {C.HASH_DIM} AS slot,
          (1 - 2 * ((h // {C.HASH_DIM}) % 2))::BIGINT AS sign
-  FROM (SELECT doc_id, {TH.CHAR_POLYHASH_SQL("term")} AS h FROM toks)
+  FROM (SELECT doc_id, {TH.char_polyhash_sql("term")} AS h FROM toks)
 )
 SELECT doc_id, slot, SUM(sign)::BIGINT AS feat
 FROM signed
@@ -1103,71 +1104,39 @@ def q_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_KFOLD_ASSIGN = f"""
 SELECT doc_id, lang, source,
-       ({TH.CHAR_POLYHASH_SQL("doc_id::VARCHAR")} % {C.KFOLD_K})::INT AS fold
+       ({TH.char_polyhash_sql("doc_id::VARCHAR")} % {C.KFOLD_K})::INT AS fold
 FROM documents
 """
 
 
-QUERIES = {
-    "corpus_split": q_corpus_split,
-    "hashed_features": q_hashed_features,
-    "kfold_assign": q_kfold_assign,
-    "decontamination_overlap": q_decontamination_overlap,
-    "pack_sequences": q_pack_sequences,
-    "quantize_embeddings": q_quantize_embeddings,
-    "boilerplate_removal": q_boilerplate_removal,
-    "segment_dedup": q_segment_dedup,
-    "bpe_merges": q_bpe_merges,
-    "global_shuffle": q_global_shuffle,
-    "chunk_documents": q_chunk_documents,
-    "temperature_sample": q_temperature_sample,
-    "heavy_hitter_tokens": q_heavy_hitter_tokens,
-    "subword_segment": q_subword_segment,
-    "subword_fertility": q_subword_fertility,
-    "sketch_quantiles": q_sketch_quantiles,
-    "misra_gries_summary": q_misra_gries_summary,
-    "cms_token_counts": q_cms_token_counts,
-    "stratified_sample": q_stratified_sample,
-    "top_tokens_per_lang": q_top_tokens_per_lang,
-    "corpus_prep_pipeline": q_corpus_prep_pipeline,
-    "gopher_quality": q_gopher_quality,
-    "source_cap": q_source_cap,
-    "inverted_index": q_inverted_index,
-    "bloom_decontaminate": q_bloom_decontaminate,
-    "weighted_sample": q_weighted_sample,
-    "dataset_mixture": q_dataset_mixture,
-    "tokenize_ids": q_tokenize_ids,
-    "span_masks": q_span_masks,
-}
-
-ORACLES = {
-    "corpus_split": SQL_CORPUS_SPLIT,
-    "hashed_features": SQL_HASHED_FEATURES,
-    "kfold_assign": SQL_KFOLD_ASSIGN,
-    "decontamination_overlap": SQL_DECONTAMINATION,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "quantize_embeddings": SQL_QUANTIZE_EMBEDDINGS,
-    "boilerplate_removal": SQL_BOILERPLATE_REMOVAL,
-    "segment_dedup": SQL_SEGMENT_DEDUP,
-    "bpe_merges": SQL_BPE_MERGES,
-    "global_shuffle": SQL_GLOBAL_SHUFFLE,
-    "chunk_documents": SQL_CHUNK_DOCUMENTS,
-    "temperature_sample": SQL_TEMPERATURE_SAMPLE,
-    "heavy_hitter_tokens": SQL_HEAVY_HITTERS,
-    "subword_segment": _subword_sql(),
-    "subword_fertility": _subword_fertility_sql(),
-    "sketch_quantiles": SQL_SKETCH_QUANTILES,
-    "misra_gries_summary": SQL_MISRA_GRIES_SUMMARY,
-    "cms_token_counts": _cms_sql(),
-    "stratified_sample": SQL_STRATIFIED_SAMPLE,
-    "top_tokens_per_lang": SQL_TOP_TOKENS_PER_LANG,
-    "corpus_prep_pipeline": SQL_CORPUS_PREP_PIPELINE,
-    "gopher_quality": _gopher_sql(),
-    "source_cap": SQL_SOURCE_CAP,
-    "inverted_index": _inverted_index_sql(),
-    "bloom_decontaminate": _bloom_decon_sql(),
-    "weighted_sample": SQL_WEIGHTED_SAMPLE,
-    "dataset_mixture": _dataset_mixture_sql(),
-    "tokenize_ids": _tokenize_ids_sql(),
-    "span_masks": _span_masks_sql(),
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "corpus_split": (q_corpus_split, SQL_CORPUS_SPLIT),
+    "hashed_features": (q_hashed_features, SQL_HASHED_FEATURES),
+    "kfold_assign": (q_kfold_assign, SQL_KFOLD_ASSIGN),
+    "decontamination_overlap": (q_decontamination_overlap, SQL_DECONTAMINATION),
+    "pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
+    "quantize_embeddings": (q_quantize_embeddings, SQL_QUANTIZE_EMBEDDINGS),
+    "boilerplate_removal": (q_boilerplate_removal, SQL_BOILERPLATE_REMOVAL),
+    "segment_dedup": (q_segment_dedup, SQL_SEGMENT_DEDUP),
+    "bpe_merges": (q_bpe_merges, SQL_BPE_MERGES),
+    "global_shuffle": (q_global_shuffle, SQL_GLOBAL_SHUFFLE),
+    "chunk_documents": (q_chunk_documents, SQL_CHUNK_DOCUMENTS),
+    "temperature_sample": (q_temperature_sample, SQL_TEMPERATURE_SAMPLE),
+    "heavy_hitter_tokens": (q_heavy_hitter_tokens, SQL_HEAVY_HITTERS),
+    "subword_segment": (q_subword_segment, _subword_sql()),
+    "subword_fertility": (q_subword_fertility, _subword_fertility_sql()),
+    "sketch_quantiles": (q_sketch_quantiles, SQL_SKETCH_QUANTILES),
+    "misra_gries_summary": (q_misra_gries_summary, SQL_MISRA_GRIES_SUMMARY),
+    "cms_token_counts": (q_cms_token_counts, _cms_sql()),
+    "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
+    "top_tokens_per_lang": (q_top_tokens_per_lang, SQL_TOP_TOKENS_PER_LANG),
+    "corpus_prep_pipeline": (q_corpus_prep_pipeline, SQL_CORPUS_PREP_PIPELINE),
+    "gopher_quality": (q_gopher_quality, _gopher_sql()),
+    "source_cap": (q_source_cap, SQL_SOURCE_CAP),
+    "inverted_index": (q_inverted_index, _inverted_index_sql()),
+    "bloom_decontaminate": (q_bloom_decontaminate, _bloom_decon_sql()),
+    "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    "dataset_mixture": (q_dataset_mixture, _dataset_mixture_sql()),
+    "tokenize_ids": (q_tokenize_ids, _tokenize_ids_sql()),
+    "span_masks": (q_span_masks, _span_masks_sql()),
 }

@@ -21,6 +21,7 @@ from cdc_stream_processor_spark.operators import dedup as D
 from cdc_stream_processor_spark.operators import fingerprint as FP
 from cdc_stream_processor_spark.operators import text as T
 from cdc_stream_processor_spark.operators import urlrules as U
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.queries_corpus import (
     BENCH_MOD,
     DECON_MIN_OVERLAP,
@@ -790,42 +791,22 @@ FROM lab GROUP BY domain
 )
 
 
-QUERIES = {
-    "coverage_sample": q_coverage_sample,
-    "lrs_dup_scale": q_lrs_dup_scale,
-    "url_filter_labels": q_url_filter_labels,
-    "url_filter_summary": q_url_filter_summary,
-    "domain_reject_rate": q_domain_reject_rate,
-    "lm_quality_calibration": q_lm_quality_calibration,
-    "lrs_by_source": q_lrs_by_source,
-    "winnowing_fingerprints": q_winnowing_fingerprints,
-    "winnowing_overlap_pairs": q_winnowing_overlap_pairs,
-    "trigram_lm_score": q_trigram_lm_score,
-    "stupid_backoff_score": q_stupid_backoff_score,
-    "contamination_report": q_contamination_report,
-    "ngram_novelty": q_ngram_novelty,
-    "novelty_curve": q_novelty_curve,
-    "quality_pipeline_keep": q_quality_pipeline_keep,
-    "ttr_by_source": q_ttr_by_source,
-    "pack_efficiency": q_pack_efficiency,
-}
-
-ORACLES = {
-    "coverage_sample": _coverage_sql(),
-    "lrs_dup_scale": SQL_LRS_DUP_SCALE,
-    "url_filter_labels": SQL_URL_FILTER_LABELS,
-    "url_filter_summary": SQL_URL_FILTER_SUMMARY,
-    "domain_reject_rate": SQL_DOMAIN_REJECT_RATE,
-    "lm_quality_calibration": _lm_calibration_sql(),
-    "lrs_by_source": SQL_LRS_BY_SOURCE,
-    "winnowing_fingerprints": SQL_WINNOWING_FINGERPRINTS,
-    "winnowing_overlap_pairs": SQL_WINNOWING_OVERLAP_PAIRS,
-    "trigram_lm_score": SQL_TRIGRAM_LM_SCORE,
-    "stupid_backoff_score": _backoff_sql(),
-    "contamination_report": SQL_CONTAMINATION_REPORT,
-    "ngram_novelty": SQL_NGRAM_NOVELTY,
-    "novelty_curve": SQL_NOVELTY_CURVE,
-    "quality_pipeline_keep": _quality_pipeline_sql(),
-    "ttr_by_source": SQL_TTR_BY_SOURCE,
-    "pack_efficiency": SQL_PACK_EFFICIENCY,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "coverage_sample": (q_coverage_sample, _coverage_sql()),
+    "lrs_dup_scale": (q_lrs_dup_scale, SQL_LRS_DUP_SCALE),
+    "url_filter_labels": (q_url_filter_labels, SQL_URL_FILTER_LABELS),
+    "url_filter_summary": (q_url_filter_summary, SQL_URL_FILTER_SUMMARY),
+    "domain_reject_rate": (q_domain_reject_rate, SQL_DOMAIN_REJECT_RATE),
+    "lm_quality_calibration": (q_lm_quality_calibration, _lm_calibration_sql()),
+    "lrs_by_source": (q_lrs_by_source, SQL_LRS_BY_SOURCE),
+    "winnowing_fingerprints": (q_winnowing_fingerprints, SQL_WINNOWING_FINGERPRINTS),
+    "winnowing_overlap_pairs": (q_winnowing_overlap_pairs, SQL_WINNOWING_OVERLAP_PAIRS),
+    "trigram_lm_score": (q_trigram_lm_score, SQL_TRIGRAM_LM_SCORE),
+    "stupid_backoff_score": (q_stupid_backoff_score, _backoff_sql()),
+    "contamination_report": (q_contamination_report, SQL_CONTAMINATION_REPORT),
+    "ngram_novelty": (q_ngram_novelty, SQL_NGRAM_NOVELTY),
+    "novelty_curve": (q_novelty_curve, SQL_NOVELTY_CURVE),
+    "quality_pipeline_keep": (q_quality_pipeline_keep, _quality_pipeline_sql()),
+    "ttr_by_source": (q_ttr_by_source, SQL_TTR_BY_SOURCE),
+    "pack_efficiency": (q_pack_efficiency, SQL_PACK_EFFICIENCY),
 }

@@ -18,16 +18,13 @@ from cdc_stream_processor_spark.operators import dedup as D
 from cdc_stream_processor_spark.operators import multimodal as M
 from cdc_stream_processor_spark.operators import similarity as S
 from cdc_stream_processor_spark.operators import text as X
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.sources import batch as B
 
 JACCARD_THRESHOLD = 0.5
 SIMHASH_MAX_HAMMING = 2  # word-soup test corpus clusters tightly; ≤2 keeps pairs meaningful
 TOPK = 5
 QUERY_STRIDE = 50  # vec_id % 50 == 0 are the similarity query vectors
-
-
-def _polyhash_sql(var: str) -> str:
-    return TH.CHAR_POLYHASH_SQL(var)
 
 
 # Shared oracle CTEs over documents: tokens, shingle hashes, token hashes.
@@ -37,10 +34,10 @@ WITH docs AS (
 ), sh AS (
   SELECT doc_id, {TH.SHINGLES_SQL("toks", 3)} AS sset FROM docs
 ), shh AS (
-  SELECT doc_id, list_transform(sset, s -> {_polyhash_sql("s")}) AS hs
+  SELECT doc_id, list_transform(sset, s -> {TH.char_polyhash_sql("s")}) AS hs
   FROM sh WHERE len(sset) > 0
 ), tokh AS (
-  SELECT doc_id, list_transform(toks, t -> {_polyhash_sql("t")}) AS hs
+  SELECT doc_id, list_transform(toks, t -> {TH.char_polyhash_sql("t")}) AS hs
   FROM docs WHERE len(toks) > 0
 )
 """
@@ -644,7 +641,7 @@ def _text_profile_sql() -> str:
     fp_fold = (
         f"CASE WHEN text IS NULL THEN NULL ELSE "
         f"list_reduce(list_prepend(0::BIGINT, "
-        f"list_transform({toks}, t -> {_polyhash_sql('t')})), "
+        f"list_transform({toks}, t -> {TH.char_polyhash_sql('t')})), "
         f"(acc, h) -> (acc * {TH.FP_FACTOR} + (h % {TH.FP_MOD})) % {TH.FP_MOD})"
         f" END"
     )
@@ -1633,7 +1630,7 @@ def _batch_inference_sql() -> str:
     )
     return f"""
 WITH hs AS (
-  SELECT doc_id, {_polyhash_sql("COALESCE(text, '')")} AS h FROM documents
+  SELECT doc_id, {TH.char_polyhash_sql("COALESCE(text, '')")} AS h FROM documents
 ), emb AS (
   SELECT doc_id,
          list_transform(generate_series(0, {I.EMBED_DIM - 1}),
@@ -2311,116 +2308,59 @@ FROM documents GROUP BY source ORDER BY source
 """
 
 
-QUERIES = {
-    "jsonl_dlq_ingest": q_jsonl_dlq_ingest,
-    "dedup_exact": q_dedup_exact,
-    "pq_codes": q_pq_codes,
-    "pq_adc_topk": q_pq_adc_topk,
-    "mmr_rerank": q_mmr_rerank,
-    "incremental_dedup": q_incremental_dedup,
-    "bigram_lift_topk": q_bigram_lift,
-    "embedding_centroids": q_embedding_centroids,
-    "centroid_assign": q_centroid_assign,
-    "typo_pairs": q_typo_pairs,
-    "doc_rarity": q_doc_rarity,
-    "bigram_lm_score": q_bigram_lm_score,
-    "lang_id_confusion": q_lang_id_confusion,
-    "readability_scores": q_readability_scores,
-    "dup_rate_by_source": q_dup_rate_by_source,
-    "dup_cluster_sizes": q_dup_cluster_sizes,
-    "embedding_outliers": q_embedding_outliers,
-    "minhash_lsh_pairs": q_minhash_pairs,
-    "dedup_clusters": q_dedup_clusters,
-    "minhash_dedup_kept": q_minhash_dedup_kept,
-    "simhash_fingerprints": q_simhash_fingerprints,
-    "simhash_pairs": q_simhash_pairs,
-    "ngram_jaccard_pairs": q_ngram_jaccard,
-    "cosine_topk": q_cosine_topk,
-    "lsh_ann_topk": q_lsh_ann_topk,
-    "ivf_ann_topk": q_ivf_ann_topk,
-    "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-    "embedding_near_dup": q_embedding_near_dup,
-    "multimodal_image_features": q_multimodal_image_features,
-    "multimodal_resize": q_multimodal_resize,
-    "multimodal_audio_features": q_multimodal_audio_features,
-    "multimodal_frame_sample": q_multimodal_frame_sample,
-    "text_profile": q_text_profile,
-    "doc_repetition": q_doc_repetition,
-    "pii_scan": q_pii_scan,
-    "doc_sentiment": q_doc_sentiment,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "knn_graph": q_knn_graph,
-    "embedding_gram": q_embedding_gram,
-    "knn_pagerank": q_knn_pagerank,
-    "knn_communities": q_knn_communities,
-    "hard_negatives": q_hard_negatives,
-    "kcenter_sample": q_kcenter_sample,
-    "dup_spans": q_dup_spans,
-    "batch_inference_embed": q_batch_inference,
-    "centroid_pair_sim": q_centroid_pair_sim,
-    "chi2_terms": q_chi2_terms,
-    "contrastive_triplets": q_contrastive_triplets,
-    "diversity_sample": q_diversity_sample,
-    "semdedup": q_semdedup,
-    "kmeans_labels": q_kmeans_labels,
-    "containment_pairs": q_containment_pairs,
-    "rp_project": q_rp_project,
-    "knn_triangles": q_knn_triangles,
-}
-
-ORACLES = {
-    "jsonl_dlq_ingest": SQL_JSONL_DLQ_INGEST,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "incremental_dedup": _incremental_dedup_sql(),
-    "bigram_lift_topk": SQL_BIGRAM_LIFT,
-    "embedding_centroids": SQL_EMBEDDING_CENTROIDS_ROWS,
-    "centroid_assign": _centroid_assign_sql(),
-    "typo_pairs": SQL_TYPO_PAIRS,
-    "doc_rarity": SQL_DOC_RARITY,
-    "bigram_lm_score": SQL_BIGRAM_LM_SCORE,
-    "lang_id_confusion": _lang_confusion_sql(),
-    "readability_scores": SQL_READABILITY_SCORES,
-    "dup_rate_by_source": _dup_rate_by_source_sql(),
-    "dup_cluster_sizes": _dup_cluster_sizes_sql(),
-    "embedding_outliers": _embedding_outliers_sql(),
-    "minhash_lsh_pairs": _minhash_sql(),
-    "dedup_clusters": _dedup_clusters_sql(),
-    "minhash_dedup_kept": _minhash_dedup_kept_sql(),
-    "simhash_fingerprints": _simhash_fp_sql(),
-    "simhash_pairs": _simhash_pairs_sql(),
-    "ngram_jaccard_pairs": NGRAM_JACCARD_SQL,
-    "cosine_topk": _cosine_topk_sql(),
-    "lsh_ann_topk": _lsh_ann_sql(),
-    "ivf_ann_topk": _ivf_ann_sql(),
-    "embedding_near_dup_pairs": _near_dup_pairs_sql(),
-    "embedding_near_dup": _near_dup_keep_sql(),
-    "multimodal_image_features": _image_features_sql(),
-    "multimodal_resize": _resize_sql(),
-    "multimodal_audio_features": _audio_features_sql(),
-    "multimodal_frame_sample": _frame_sample_sql(),
-    "text_profile": _text_profile_sql(),
-    "doc_repetition": _doc_repetition_sql(),
-    "pii_scan": _pii_scan_sql(),
-    "doc_sentiment": _doc_sentiment_sql(),
-    "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "knn_graph": _knn_graph_sql(),
-    "embedding_gram": _embedding_gram_sql(),
-    "knn_pagerank": _knn_pagerank_sql(),
-    "knn_communities": _knn_communities_sql(),
-    "hard_negatives": _hard_negatives_sql(),
-    "kcenter_sample": _kcenter_sql(),
-    "dup_spans": _dup_spans_sql(),
-    "batch_inference_embed": _batch_inference_sql(),
-    "centroid_pair_sim": _centroid_pair_sim_sql(),
-    "chi2_terms": _chi2_terms_sql(),
-    "contrastive_triplets": _contrastive_triplets_sql(),
-    "diversity_sample": _diversity_sample_sql(),
-    "semdedup": _semdedup_sql(),
-    "kmeans_labels": _kmeans_sql(),
-    "pq_codes": _pq_sql(),
-    "pq_adc_topk": _pq_adc_sql(),
-    "mmr_rerank": _mmr_sql(),
-    "containment_pairs": _containment_pairs_sql(),
-    "rp_project": _rp_project_sql(),
-    "knn_triangles": _knn_triangles_sql(),
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "jsonl_dlq_ingest": (q_jsonl_dlq_ingest, SQL_JSONL_DLQ_INGEST),
+    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
+    "pq_codes": (q_pq_codes, _pq_sql()),
+    "pq_adc_topk": (q_pq_adc_topk, _pq_adc_sql()),
+    "mmr_rerank": (q_mmr_rerank, _mmr_sql()),
+    "incremental_dedup": (q_incremental_dedup, _incremental_dedup_sql()),
+    "bigram_lift_topk": (q_bigram_lift, SQL_BIGRAM_LIFT),
+    "embedding_centroids": (q_embedding_centroids, SQL_EMBEDDING_CENTROIDS_ROWS),
+    "centroid_assign": (q_centroid_assign, _centroid_assign_sql()),
+    "typo_pairs": (q_typo_pairs, SQL_TYPO_PAIRS),
+    "doc_rarity": (q_doc_rarity, SQL_DOC_RARITY),
+    "bigram_lm_score": (q_bigram_lm_score, SQL_BIGRAM_LM_SCORE),
+    "lang_id_confusion": (q_lang_id_confusion, _lang_confusion_sql()),
+    "readability_scores": (q_readability_scores, SQL_READABILITY_SCORES),
+    "dup_rate_by_source": (q_dup_rate_by_source, _dup_rate_by_source_sql()),
+    "dup_cluster_sizes": (q_dup_cluster_sizes, _dup_cluster_sizes_sql()),
+    "embedding_outliers": (q_embedding_outliers, _embedding_outliers_sql()),
+    "minhash_lsh_pairs": (q_minhash_pairs, _minhash_sql()),
+    "dedup_clusters": (q_dedup_clusters, _dedup_clusters_sql()),
+    "minhash_dedup_kept": (q_minhash_dedup_kept, _minhash_dedup_kept_sql()),
+    "simhash_fingerprints": (q_simhash_fingerprints, _simhash_fp_sql()),
+    "simhash_pairs": (q_simhash_pairs, _simhash_pairs_sql()),
+    "ngram_jaccard_pairs": (q_ngram_jaccard, NGRAM_JACCARD_SQL),
+    "cosine_topk": (q_cosine_topk, _cosine_topk_sql()),
+    "lsh_ann_topk": (q_lsh_ann_topk, _lsh_ann_sql()),
+    "ivf_ann_topk": (q_ivf_ann_topk, _ivf_ann_sql()),
+    "embedding_near_dup_pairs": (q_embedding_near_dup_pairs, _near_dup_pairs_sql()),
+    "embedding_near_dup": (q_embedding_near_dup, _near_dup_keep_sql()),
+    "multimodal_image_features": (q_multimodal_image_features, _image_features_sql()),
+    "multimodal_resize": (q_multimodal_resize, _resize_sql()),
+    "multimodal_audio_features": (q_multimodal_audio_features, _audio_features_sql()),
+    "multimodal_frame_sample": (q_multimodal_frame_sample, _frame_sample_sql()),
+    "text_profile": (q_text_profile, _text_profile_sql()),
+    "doc_repetition": (q_doc_repetition, _doc_repetition_sql()),
+    "pii_scan": (q_pii_scan, _pii_scan_sql()),
+    "doc_sentiment": (q_doc_sentiment, _doc_sentiment_sql()),
+    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
+    "knn_graph": (q_knn_graph, _knn_graph_sql()),
+    "embedding_gram": (q_embedding_gram, _embedding_gram_sql()),
+    "knn_pagerank": (q_knn_pagerank, _knn_pagerank_sql()),
+    "knn_communities": (q_knn_communities, _knn_communities_sql()),
+    "hard_negatives": (q_hard_negatives, _hard_negatives_sql()),
+    "kcenter_sample": (q_kcenter_sample, _kcenter_sql()),
+    "dup_spans": (q_dup_spans, _dup_spans_sql()),
+    "batch_inference_embed": (q_batch_inference, _batch_inference_sql()),
+    "centroid_pair_sim": (q_centroid_pair_sim, _centroid_pair_sim_sql()),
+    "chi2_terms": (q_chi2_terms, _chi2_terms_sql()),
+    "contrastive_triplets": (q_contrastive_triplets, _contrastive_triplets_sql()),
+    "diversity_sample": (q_diversity_sample, _diversity_sample_sql()),
+    "semdedup": (q_semdedup, _semdedup_sql()),
+    "kmeans_labels": (q_kmeans_labels, _kmeans_sql()),
+    "containment_pairs": (q_containment_pairs, _containment_pairs_sql()),
+    "rp_project": (q_rp_project, _rp_project_sql()),
+    "knn_triangles": (q_knn_triangles, _knn_triangles_sql()),
 }

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from cdc_stream_processor_spark.operators import linkage as L
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.sources import batch as B
 
 
@@ -53,12 +54,7 @@ FROM customer GROUP BY c_nationkey, c_mktsegment
 """
 
 
-QUERIES = {
-    "er_match_pairs": q_er_match_pairs,
-    "er_block_stats": q_er_block_stats,
-}
-
-ORACLES = {
-    "er_match_pairs": SQL_ER_MATCH_PAIRS,
-    "er_block_stats": SQL_ER_BLOCK_STATS,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "er_match_pairs": (q_er_match_pairs, SQL_ER_MATCH_PAIRS),
+    "er_block_stats": (q_er_block_stats, SQL_ER_BLOCK_STATS),
 }

@@ -25,6 +25,7 @@ from cdc_stream_processor_spark.operators import multimodal as M
 from cdc_stream_processor_spark.operators import profiling as PF
 from cdc_stream_processor_spark.operators import similarity as S
 from cdc_stream_processor_spark.operators import text as X
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.queries_extensions import (
     _FOLD_SUM,
     _minhash_pairs_ctes,
@@ -885,13 +886,13 @@ def q_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_recall_eval_sql() -> str:
     from cdc_stream_processor_spark.queries_extensions import (
-        ORACLES as _QE_ORACLES,
         QUERY_STRIDE,
         TOPK,
         _FOLD_SUM as _FS,
+        _ivf_ann_sql,
     )
 
-    ivf_full = _QE_ORACLES["ivf_ann_topk"].strip()
+    ivf_full = _ivf_ann_sql().strip()
     marker = "SELECT query_id, neighbor_id, cosine_sim, rank FROM ("
     idx = ivf_full.rindex(marker)
     ctes = ivf_full[:idx].rstrip()  # the WITH chain, ends with ')'
@@ -1311,55 +1312,29 @@ FROM base CROSS JOIN vocab CROSS JOIN meta
 # complex oracles register first and any window-50 overflow falls on the
 # four most trivial entries (map-only / two-agg spectra), which carry
 # multiple local greens at both SFs this session.
-QUERIES = {
-    "ams_f2_tokens": q_ams_f2_tokens,
-    "minhash_est_vs_exact": q_minhash_est_vs_exact,
-    "knn_hubness": q_knn_hubness,
-    "er_entities": q_er_entities,
-    "knn_clustering_coeff": q_knn_clustering_coeff,
-    "frequent_event_seqs": q_frequent_event_seqs,
-    "theil_sen_daily": q_theil_sen_daily,
-    "ivf_recall_eval": q_ivf_recall_eval,
-    "watermark_slack_audit": q_watermark_slack_audit,
-    "embedding_health_audit": q_embedding_health_audit,
-    "timestamp_health_audit": q_timestamp_health_audit,
-    "silhouette_by_label": q_silhouette_by_label,
-    "knn_label_agreement": q_knn_label_agreement,
-    "dbscan_labels": q_dbscan_labels,
-    "textrank_keywords": q_textrank_keywords,
-    "lsh_recall_eval": q_lsh_recall_eval,
-    "ppr_related_vectors": q_ppr_related_vectors,
-    "knn_assortativity": q_knn_assortativity,
-    "community_conductance": q_community_conductance,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "ams_f2_tokens": (q_ams_f2_tokens, SQL_AMS_F2_TOKENS),
+    "minhash_est_vs_exact": (q_minhash_est_vs_exact, _minhash_est_vs_exact_sql()),
+    "knn_hubness": (q_knn_hubness, _knn_hubness_sql()),
+    "er_entities": (q_er_entities, _er_entities_sql()),
+    "knn_clustering_coeff": (q_knn_clustering_coeff, _knn_clustering_coeff_sql()),
+    "frequent_event_seqs": (q_frequent_event_seqs, _frequent_event_seqs_sql()),
+    "theil_sen_daily": (q_theil_sen_daily, _theil_sen_sql()),
+    "ivf_recall_eval": (q_ivf_recall_eval, _ivf_recall_eval_sql()),
+    "watermark_slack_audit": (q_watermark_slack_audit, SQL_WATERMARK_SLACK_AUDIT),
+    "embedding_health_audit": (q_embedding_health_audit, _embedding_health_sql()),
+    "timestamp_health_audit": (q_timestamp_health_audit, _ts_health_sql()),
+    "silhouette_by_label": (q_silhouette_by_label, _silhouette_sql()),
+    "knn_label_agreement": (q_knn_label_agreement, _knn_label_agreement_sql()),
+    "dbscan_labels": (q_dbscan_labels, _dbscan_sql()),
+    "textrank_keywords": (q_textrank_keywords, _textrank_sql()),
+    "lsh_recall_eval": (q_lsh_recall_eval, _lsh_recall_eval_sql()),
+    "ppr_related_vectors": (q_ppr_related_vectors, _ppr_sql()),
+    "knn_assortativity": (q_knn_assortativity, _knn_assortativity_sql()),
+    "community_conductance": (q_community_conductance, _community_conductance_sql()),
     # window-50 overflow candidates (roll to r8 if the window fills):
-    "audio_chunks": q_audio_chunks,
-    "k_anonymity_audit": q_k_anonymity_audit,
-    "l_diversity_audit": q_l_diversity_audit,
-    "corpus_datasheet": q_corpus_datasheet,
-}
-
-ORACLES = {
-    "ams_f2_tokens": SQL_AMS_F2_TOKENS,
-    "minhash_est_vs_exact": _minhash_est_vs_exact_sql(),
-    "knn_hubness": _knn_hubness_sql(),
-    "er_entities": _er_entities_sql(),
-    "l_diversity_audit": SQL_L_DIVERSITY_AUDIT,
-    "knn_clustering_coeff": _knn_clustering_coeff_sql(),
-    "frequent_event_seqs": _frequent_event_seqs_sql(),
-    "theil_sen_daily": _theil_sen_sql(),
-    "corpus_datasheet": SQL_CORPUS_DATASHEET,
-    "ivf_recall_eval": _ivf_recall_eval_sql(),
-    "watermark_slack_audit": SQL_WATERMARK_SLACK_AUDIT,
-    "embedding_health_audit": _embedding_health_sql(),
-    "timestamp_health_audit": _ts_health_sql(),
-    "ppr_related_vectors": _ppr_sql(),
-    "knn_assortativity": _knn_assortativity_sql(),
-    "community_conductance": _community_conductance_sql(),
-    "silhouette_by_label": _silhouette_sql(),
-    "knn_label_agreement": _knn_label_agreement_sql(),
-    "dbscan_labels": _dbscan_sql(),
-    "textrank_keywords": _textrank_sql(),
-    "audio_chunks": SQL_AUDIO_CHUNKS,
-    "k_anonymity_audit": SQL_K_ANONYMITY_AUDIT,
-    "lsh_recall_eval": _lsh_recall_eval_sql(),
+    "audio_chunks": (q_audio_chunks, SQL_AUDIO_CHUNKS),
+    "k_anonymity_audit": (q_k_anonymity_audit, SQL_K_ANONYMITY_AUDIT),
+    "l_diversity_audit": (q_l_diversity_audit, SQL_L_DIVERSITY_AUDIT),
+    "corpus_datasheet": (q_corpus_datasheet, SQL_CORPUS_DATASHEET),
 }

@@ -22,6 +22,7 @@ from cdc_stream_processor_spark.operators.relational import (
 )
 from cdc_stream_processor_spark.operators import relational as R
 from cdc_stream_processor_spark.plans import layout as L
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.sources import batch as B
 
 
@@ -3203,166 +3204,93 @@ SELECT
 """
 
 
-QUERIES = {
-    "pricing_summary": q_pricing_summary,
-    "user_sessions": q_user_sessions,
-    "event_transitions": q_event_transitions,
-    "event_funnel": q_event_funnel,
-    "cohort_retention": q_cohort_retention,
-    "daily_timeseries": q_daily_timeseries,
-    "rolling_anomalies": q_rolling_anomalies,
-    "pricing_summary_sql": q_pricing_summary_sql,
-    "shipping_priority": q_shipping_priority,
-    "supplier_volume": q_supplier_volume,
-    "top_orders_per_customer": q_top_orders_per_customer,
-    "event_analytics": q_event_analytics,
-    "set_ops": q_set_ops,
-    "rollup_revenue": q_rollup_revenue,
-    "distinct_users": q_distinct_users,
-    "approx_distinct_users": q_approx_distinct_users,
-    "cube_orders": q_cube_orders,
-    "semi_anti_customers": q_semi_anti_customers,
-    "events_asof_orders": q_events_asof_orders,
-    "event_pairs_range_join": q_event_pairs_range_join,
-    "order_value_deciles": q_order_value_deciles,
-    "pivot_order_revenue": q_pivot_order_revenue,
-    "unpivot_order_revenue": q_unpivot_order_revenue,
-    "doc_word_count": q_doc_word_count,
-    "order_price_quantiles": q_order_price_quantiles,
-    "order_price_quantiles_approx": q_order_price_quantiles_approx,
-    "grouping_sets_revenue": q_grouping_sets_revenue,
-    "zorder_keys": q_zorder_keys,
-    "json_props_rollup": q_json_props_rollup,
-    "profile_events": q_profile_events,
-    "key_skew_profile": q_key_skew_profile,
-    "seasonal_decompose": q_seasonal_decompose,
-    "acf_daily": q_acf_daily,
-    "cusum_changepoint": q_cusum_changepoint,
-    "skyline_orders": q_skyline_orders,
-    "part_affinity": q_part_affinity,
-    "survival_curve": q_survival_curve,
-    "ab_test_zscores": q_ab_test_zscores,
-    "bootstrap_ci_revenue": q_bootstrap_ci_revenue,
-    "expectation_suite": q_expectation_suite,
-    "pattern_match_daily": q_pattern_match_daily,
-    "sequence_gap_audit": q_sequence_gap_audit,
-    "rfm_scores": q_rfm_scores,
-    "dynamic_sessions": q_dynamic_sessions,
-    "kendall_tau_types": q_kendall_tau_types,
-    "seasonal_anomalies": q_seasonal_anomalies,
-    "conversion_lag_quantiles": q_conversion_lag_quantiles,
-    "user_burstiness": q_user_burstiness,
-    "user_path_score": q_user_path_score,
-    "seasonal_by_type": q_seasonal_by_type,
-    "forecast_backtest": q_forecast_backtest,
-    "join_cardinality_audit": q_join_cardinality_audit,
-    "dau_mau_stickiness": q_dau_mau_stickiness,
-    "power_user_share": q_power_user_share,
-    "revenue_mom_growth": q_revenue_mom_growth,
-    "ltv_cohort_curve": q_ltv_cohort_curve,
-    "basket_size_distribution": q_basket_size_distribution,
-    "event_type_correlation": q_event_type_correlation,
-    "rolling_median_daily": q_rolling_median_daily,
-    "user_event_paths": q_user_event_paths,
-    "daily_ohlc": q_daily_ohlc,
-    "concurrent_sessions": q_concurrent_sessions,
-    "hopping_event_counts": q_hopping_event_counts,
-    "winsorize_values": q_winsorize_values,
-    "hopping_active_users": q_hopping_active_users,
-    "user_value_mad": q_user_value_mad,
-    "user_similarity": q_user_similarity,
-    "nation_revenue_share": q_nation_revenue_share,
-    "benford_digits": q_benford_digits,
-    "order_value_gini": q_order_value_gini,
-    "trending_event_types": q_trending_event_types,
-    "pseudonymized_events": q_pseudonymized_events,
-    "order_price_cdf": q_order_price_cdf,
-    "user_segments": q_user_segments,
-    "fk_integrity_audit": q_fk_integrity_audit,
-    "ewma_event_rate": q_ewma_event_rate,
-    "value_histogram": q_value_histogram,
-    "first_touch_attribution": q_first_touch_attribution,
-    "small_quantity_revenue": q_small_quantity_revenue,
-}
-
-ORACLES = {
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "user_sessions": SQL_USER_SESSIONS,
-    "event_funnel": SQL_EVENT_FUNNEL,
-    "cohort_retention": SQL_COHORT_RETENTION,
-    "daily_timeseries": SQL_DAILY_TIMESERIES,
-    "rolling_anomalies": SQL_ROLLING_ANOMALIES,
-    "event_transitions": SQL_EVENT_TRANSITIONS,
-    "pricing_summary_sql": SQL_PRICING_SUMMARY,
-    "shipping_priority": SQL_SHIPPING_PRIORITY,
-    "supplier_volume": SQL_SUPPLIER_VOLUME,
-    "top_orders_per_customer": SQL_TOP_ORDERS_PER_CUSTOMER,
-    "event_analytics": SQL_EVENT_ANALYTICS,
-    "set_ops": SQL_SET_OPS,
-    "rollup_revenue": SQL_ROLLUP_REVENUE,
-    "distinct_users": SQL_DISTINCT_USERS,
-    "cube_orders": SQL_CUBE_ORDERS,
-    "semi_anti_customers": SQL_SEMI_ANTI_CUSTOMERS,
-    "events_asof_orders": SQL_EVENTS_ASOF_ORDERS,
-    "event_pairs_range_join": SQL_EVENT_PAIRS_RANGE_JOIN,
-    "order_value_deciles": SQL_ORDER_VALUE_DECILES,
-    "pivot_order_revenue": SQL_PIVOT_ORDER_REVENUE,
-    "unpivot_order_revenue": SQL_UNPIVOT_ORDER_REVENUE,
-    "doc_word_count": SQL_DOC_WORD_COUNT,
-    "order_price_quantiles": SQL_ORDER_PRICE_QUANTILES,
-    "order_price_quantiles_approx": SQL_ORDER_PRICE_QUANTILES_APPROX,
-    "approx_distinct_users": SQL_APPROX_DISTINCT_USERS,
-    "grouping_sets_revenue": SQL_GROUPING_SETS_REVENUE,
-    "zorder_keys": SQL_ZORDER_KEYS,
-    "json_props_rollup": SQL_JSON_PROPS_ROLLUP,
-    "profile_events": _profile_events_sql(),
-    "key_skew_profile": SQL_KEY_SKEW_PROFILE,
-    "seasonal_decompose": SQL_SEASONAL_DECOMPOSE,
-    "acf_daily": SQL_ACF_DAILY,
-    "cusum_changepoint": SQL_CUSUM_CHANGEPOINT,
-    "skyline_orders": SQL_SKYLINE_ORDERS,
-    "part_affinity": SQL_PART_AFFINITY,
-    "survival_curve": SQL_SURVIVAL_CURVE,
-    "ab_test_zscores": SQL_AB_TEST_ZSCORES,
-    "bootstrap_ci_revenue": SQL_BOOTSTRAP_CI_REVENUE,
-    "expectation_suite": SQL_EXPECTATION_SUITE,
-    "pattern_match_daily": SQL_PATTERN_MATCH_DAILY,
-    "sequence_gap_audit": SQL_SEQUENCE_GAP_AUDIT,
-    "rfm_scores": SQL_RFM_SCORES,
-    "dynamic_sessions": _dynamic_sessions_sql(),
-    "kendall_tau_types": SQL_KENDALL_TAU_TYPES,
-    "seasonal_anomalies": SQL_SEASONAL_ANOMALIES,
-    "conversion_lag_quantiles": SQL_CONVERSION_LAG_QUANTILES,
-    "user_burstiness": SQL_USER_BURSTINESS,
-    "user_path_score": SQL_USER_PATH_SCORE,
-    "seasonal_by_type": SQL_SEASONAL_BY_TYPE,
-    "forecast_backtest": SQL_FORECAST_BACKTEST,
-    "join_cardinality_audit": SQL_JOIN_CARDINALITY_AUDIT,
-    "dau_mau_stickiness": SQL_DAU_MAU_STICKINESS,
-    "power_user_share": SQL_POWER_USER_SHARE,
-    "revenue_mom_growth": SQL_REVENUE_MOM_GROWTH,
-    "ltv_cohort_curve": SQL_LTV_COHORT_CURVE,
-    "basket_size_distribution": SQL_BASKET_SIZE_DISTRIBUTION,
-    "event_type_correlation": SQL_EVENT_TYPE_CORRELATION,
-    "rolling_median_daily": SQL_ROLLING_MEDIAN_DAILY,
-    "user_event_paths": SQL_USER_EVENT_PATHS,
-    "daily_ohlc": SQL_DAILY_OHLC,
-    "concurrent_sessions": _concurrent_sessions_sql(),
-    "hopping_event_counts": SQL_HOPPING_EVENT_COUNTS,
-    "winsorize_values": SQL_WINSORIZE_VALUES,
-    "hopping_active_users": SQL_HOPPING_ACTIVE_USERS,
-    "user_value_mad": SQL_USER_VALUE_MAD,
-    "user_similarity": SQL_USER_SIMILARITY,
-    "nation_revenue_share": SQL_NATION_REVENUE_SHARE,
-    "benford_digits": SQL_BENFORD_DIGITS,
-    "order_value_gini": SQL_ORDER_VALUE_GINI,
-    "trending_event_types": SQL_TRENDING_EVENT_TYPES,
-    "pseudonymized_events": SQL_PSEUDONYMIZED_EVENTS,
-    "order_price_cdf": SQL_ORDER_PRICE_CDF,
-    "user_segments": SQL_USER_SEGMENTS,
-    "fk_integrity_audit": SQL_FK_INTEGRITY_AUDIT,
-    "ewma_event_rate": _ewma_sql(),
-    "value_histogram": SQL_VALUE_HISTOGRAM,
-    "first_touch_attribution": SQL_FIRST_TOUCH,
-    "small_quantity_revenue": SQL_SMALL_QUANTITY_REVENUE,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
+    "user_sessions": (q_user_sessions, SQL_USER_SESSIONS),
+    "event_transitions": (q_event_transitions, SQL_EVENT_TRANSITIONS),
+    "event_funnel": (q_event_funnel, SQL_EVENT_FUNNEL),
+    "cohort_retention": (q_cohort_retention, SQL_COHORT_RETENTION),
+    "daily_timeseries": (q_daily_timeseries, SQL_DAILY_TIMESERIES),
+    "rolling_anomalies": (q_rolling_anomalies, SQL_ROLLING_ANOMALIES),
+    "pricing_summary_sql": (q_pricing_summary_sql, SQL_PRICING_SUMMARY),
+    "shipping_priority": (q_shipping_priority, SQL_SHIPPING_PRIORITY),
+    "supplier_volume": (q_supplier_volume, SQL_SUPPLIER_VOLUME),
+    "top_orders_per_customer": (q_top_orders_per_customer, SQL_TOP_ORDERS_PER_CUSTOMER),
+    "event_analytics": (q_event_analytics, SQL_EVENT_ANALYTICS),
+    "set_ops": (q_set_ops, SQL_SET_OPS),
+    "rollup_revenue": (q_rollup_revenue, SQL_ROLLUP_REVENUE),
+    "distinct_users": (q_distinct_users, SQL_DISTINCT_USERS),
+    "approx_distinct_users": (q_approx_distinct_users, SQL_APPROX_DISTINCT_USERS),
+    "cube_orders": (q_cube_orders, SQL_CUBE_ORDERS),
+    "semi_anti_customers": (q_semi_anti_customers, SQL_SEMI_ANTI_CUSTOMERS),
+    "events_asof_orders": (q_events_asof_orders, SQL_EVENTS_ASOF_ORDERS),
+    "event_pairs_range_join": (q_event_pairs_range_join, SQL_EVENT_PAIRS_RANGE_JOIN),
+    "order_value_deciles": (q_order_value_deciles, SQL_ORDER_VALUE_DECILES),
+    "pivot_order_revenue": (q_pivot_order_revenue, SQL_PIVOT_ORDER_REVENUE),
+    "unpivot_order_revenue": (q_unpivot_order_revenue, SQL_UNPIVOT_ORDER_REVENUE),
+    "doc_word_count": (q_doc_word_count, SQL_DOC_WORD_COUNT),
+    "order_price_quantiles": (q_order_price_quantiles, SQL_ORDER_PRICE_QUANTILES),
+    "order_price_quantiles_approx": (
+        q_order_price_quantiles_approx,
+        SQL_ORDER_PRICE_QUANTILES_APPROX,
+    ),
+    "grouping_sets_revenue": (q_grouping_sets_revenue, SQL_GROUPING_SETS_REVENUE),
+    "zorder_keys": (q_zorder_keys, SQL_ZORDER_KEYS),
+    "json_props_rollup": (q_json_props_rollup, SQL_JSON_PROPS_ROLLUP),
+    "profile_events": (q_profile_events, _profile_events_sql()),
+    "key_skew_profile": (q_key_skew_profile, SQL_KEY_SKEW_PROFILE),
+    "seasonal_decompose": (q_seasonal_decompose, SQL_SEASONAL_DECOMPOSE),
+    "acf_daily": (q_acf_daily, SQL_ACF_DAILY),
+    "cusum_changepoint": (q_cusum_changepoint, SQL_CUSUM_CHANGEPOINT),
+    "skyline_orders": (q_skyline_orders, SQL_SKYLINE_ORDERS),
+    "part_affinity": (q_part_affinity, SQL_PART_AFFINITY),
+    "survival_curve": (q_survival_curve, SQL_SURVIVAL_CURVE),
+    "ab_test_zscores": (q_ab_test_zscores, SQL_AB_TEST_ZSCORES),
+    "bootstrap_ci_revenue": (q_bootstrap_ci_revenue, SQL_BOOTSTRAP_CI_REVENUE),
+    "expectation_suite": (q_expectation_suite, SQL_EXPECTATION_SUITE),
+    "pattern_match_daily": (q_pattern_match_daily, SQL_PATTERN_MATCH_DAILY),
+    "sequence_gap_audit": (q_sequence_gap_audit, SQL_SEQUENCE_GAP_AUDIT),
+    "rfm_scores": (q_rfm_scores, SQL_RFM_SCORES),
+    "dynamic_sessions": (q_dynamic_sessions, _dynamic_sessions_sql()),
+    "kendall_tau_types": (q_kendall_tau_types, SQL_KENDALL_TAU_TYPES),
+    "seasonal_anomalies": (q_seasonal_anomalies, SQL_SEASONAL_ANOMALIES),
+    "conversion_lag_quantiles": (
+        q_conversion_lag_quantiles,
+        SQL_CONVERSION_LAG_QUANTILES,
+    ),
+    "user_burstiness": (q_user_burstiness, SQL_USER_BURSTINESS),
+    "user_path_score": (q_user_path_score, SQL_USER_PATH_SCORE),
+    "seasonal_by_type": (q_seasonal_by_type, SQL_SEASONAL_BY_TYPE),
+    "forecast_backtest": (q_forecast_backtest, SQL_FORECAST_BACKTEST),
+    "join_cardinality_audit": (q_join_cardinality_audit, SQL_JOIN_CARDINALITY_AUDIT),
+    "dau_mau_stickiness": (q_dau_mau_stickiness, SQL_DAU_MAU_STICKINESS),
+    "power_user_share": (q_power_user_share, SQL_POWER_USER_SHARE),
+    "revenue_mom_growth": (q_revenue_mom_growth, SQL_REVENUE_MOM_GROWTH),
+    "ltv_cohort_curve": (q_ltv_cohort_curve, SQL_LTV_COHORT_CURVE),
+    "basket_size_distribution": (
+        q_basket_size_distribution,
+        SQL_BASKET_SIZE_DISTRIBUTION,
+    ),
+    "event_type_correlation": (q_event_type_correlation, SQL_EVENT_TYPE_CORRELATION),
+    "rolling_median_daily": (q_rolling_median_daily, SQL_ROLLING_MEDIAN_DAILY),
+    "user_event_paths": (q_user_event_paths, SQL_USER_EVENT_PATHS),
+    "daily_ohlc": (q_daily_ohlc, SQL_DAILY_OHLC),
+    "concurrent_sessions": (q_concurrent_sessions, _concurrent_sessions_sql()),
+    "hopping_event_counts": (q_hopping_event_counts, SQL_HOPPING_EVENT_COUNTS),
+    "winsorize_values": (q_winsorize_values, SQL_WINSORIZE_VALUES),
+    "hopping_active_users": (q_hopping_active_users, SQL_HOPPING_ACTIVE_USERS),
+    "user_value_mad": (q_user_value_mad, SQL_USER_VALUE_MAD),
+    "user_similarity": (q_user_similarity, SQL_USER_SIMILARITY),
+    "nation_revenue_share": (q_nation_revenue_share, SQL_NATION_REVENUE_SHARE),
+    "benford_digits": (q_benford_digits, SQL_BENFORD_DIGITS),
+    "order_value_gini": (q_order_value_gini, SQL_ORDER_VALUE_GINI),
+    "trending_event_types": (q_trending_event_types, SQL_TRENDING_EVENT_TYPES),
+    "pseudonymized_events": (q_pseudonymized_events, SQL_PSEUDONYMIZED_EVENTS),
+    "order_price_cdf": (q_order_price_cdf, SQL_ORDER_PRICE_CDF),
+    "user_segments": (q_user_segments, SQL_USER_SEGMENTS),
+    "fk_integrity_audit": (q_fk_integrity_audit, SQL_FK_INTEGRITY_AUDIT),
+    "ewma_event_rate": (q_ewma_event_rate, _ewma_sql()),
+    "value_histogram": (q_value_histogram, SQL_VALUE_HISTOGRAM),
+    "first_touch_attribution": (q_first_touch_attribution, SQL_FIRST_TOUCH),
+    "small_quantity_revenue": (q_small_quantity_revenue, SQL_SMALL_QUANTITY_REVENUE),
 }

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from cdc_stream_processor_spark.functions import texthash as TH
 from cdc_stream_processor_spark.operators import retrieval as R
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.sources import batch as B
 
 _TOKS = TH.TOKENS_SQL.format(text="text")
@@ -274,22 +275,12 @@ FROM exact e JOIN kth k USING (source)
 """
 
 
-QUERIES = {
-    "bm25_topk": q_bm25_topk,
-    "rrf_fusion": q_rrf_fusion,
-    "df_spectrum": q_df_spectrum,
-    "token_diversity": q_token_diversity,
-    "hellinger_source_drift": q_hellinger_source_drift,
-    "zipf_slope_by_source": q_zipf_slope_by_source,
-    "kmv_distinct_tokens": q_kmv_distinct_tokens,
-}
-
-ORACLES = {
-    "bm25_topk": SQL_BM25_TOPK,
-    "rrf_fusion": SQL_RRF_FUSION,
-    "df_spectrum": SQL_DF_SPECTRUM,
-    "token_diversity": SQL_TOKEN_DIVERSITY,
-    "hellinger_source_drift": SQL_HELLINGER_SOURCE_DRIFT,
-    "zipf_slope_by_source": SQL_ZIPF_SLOPE_BY_SOURCE,
-    "kmv_distinct_tokens": SQL_KMV_DISTINCT_TOKENS,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "bm25_topk": (q_bm25_topk, SQL_BM25_TOPK),
+    "rrf_fusion": (q_rrf_fusion, SQL_RRF_FUSION),
+    "df_spectrum": (q_df_spectrum, SQL_DF_SPECTRUM),
+    "token_diversity": (q_token_diversity, SQL_TOKEN_DIVERSITY),
+    "hellinger_source_drift": (q_hellinger_source_drift, SQL_HELLINGER_SOURCE_DRIFT),
+    "zipf_slope_by_source": (q_zipf_slope_by_source, SQL_ZIPF_SLOPE_BY_SOURCE),
+    "kmv_distinct_tokens": (q_kmv_distinct_tokens, SQL_KMV_DISTINCT_TOKENS),
 }

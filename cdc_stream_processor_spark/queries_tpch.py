@@ -32,6 +32,7 @@ from cdc_stream_processor_spark.operators.relational import (
     dsum,
     global_top_k,
 )
+from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.sources import batch as B
 
 
@@ -966,44 +967,23 @@ ORDER BY numwait DESC, s_suppkey ASC
 """
 
 
-QUERIES = {
-    "order_priority_check": q_order_priority_check,
-    "returned_item_customers": q_returned_item_customers,
-    "important_parts": q_important_parts,
-    "custdist": q_custdist,
-    "promo_revenue": q_promo_revenue,
-    "top_supplier": q_top_supplier,
-    "parts_supplier_dist": q_parts_supplier_dist,
-    "large_orders": q_large_orders,
-    "sales_opportunity": q_sales_opportunity,
-    "min_acctbal_supplier": q_min_acctbal_supplier,
-    "forecast_revenue": q_forecast_revenue,
-    "nation_trade_volume": q_nation_trade_volume,
-    "market_share": q_market_share,
-    "priority_linecount": q_priority_linecount,
-    "disjunctive_revenue": q_disjunctive_revenue,
-    "product_profit": q_product_profit,
-    "dominant_part_suppliers": q_dominant_part_suppliers,
-    "waiting_suppliers": q_waiting_suppliers,
-}
-
-ORACLES = {
-    "order_priority_check": SQL_ORDER_PRIORITY_CHECK,
-    "returned_item_customers": SQL_RETURNED_ITEM_CUSTOMERS,
-    "important_parts": SQL_IMPORTANT_PARTS,
-    "custdist": SQL_CUSTDIST,
-    "promo_revenue": SQL_PROMO_REVENUE,
-    "top_supplier": SQL_TOP_SUPPLIER,
-    "parts_supplier_dist": SQL_PARTS_SUPPLIER_DIST,
-    "large_orders": SQL_LARGE_ORDERS,
-    "sales_opportunity": SQL_SALES_OPPORTUNITY,
-    "min_acctbal_supplier": SQL_MIN_ACCTBAL_SUPPLIER,
-    "forecast_revenue": SQL_FORECAST_REVENUE,
-    "nation_trade_volume": SQL_NATION_TRADE_VOLUME,
-    "market_share": SQL_MARKET_SHARE,
-    "priority_linecount": SQL_PRIORITY_LINECOUNT,
-    "disjunctive_revenue": SQL_DISJUNCTIVE_REVENUE,
-    "product_profit": SQL_PRODUCT_PROFIT,
-    "dominant_part_suppliers": SQL_DOMINANT_PART_SUPPLIERS,
-    "waiting_suppliers": SQL_WAITING_SUPPLIERS,
+QUERIES: dict[str, tuple[QueryFn, str]] = {
+    "order_priority_check": (q_order_priority_check, SQL_ORDER_PRIORITY_CHECK),
+    "returned_item_customers": (q_returned_item_customers, SQL_RETURNED_ITEM_CUSTOMERS),
+    "important_parts": (q_important_parts, SQL_IMPORTANT_PARTS),
+    "custdist": (q_custdist, SQL_CUSTDIST),
+    "promo_revenue": (q_promo_revenue, SQL_PROMO_REVENUE),
+    "top_supplier": (q_top_supplier, SQL_TOP_SUPPLIER),
+    "parts_supplier_dist": (q_parts_supplier_dist, SQL_PARTS_SUPPLIER_DIST),
+    "large_orders": (q_large_orders, SQL_LARGE_ORDERS),
+    "sales_opportunity": (q_sales_opportunity, SQL_SALES_OPPORTUNITY),
+    "min_acctbal_supplier": (q_min_acctbal_supplier, SQL_MIN_ACCTBAL_SUPPLIER),
+    "forecast_revenue": (q_forecast_revenue, SQL_FORECAST_REVENUE),
+    "nation_trade_volume": (q_nation_trade_volume, SQL_NATION_TRADE_VOLUME),
+    "market_share": (q_market_share, SQL_MARKET_SHARE),
+    "priority_linecount": (q_priority_linecount, SQL_PRIORITY_LINECOUNT),
+    "disjunctive_revenue": (q_disjunctive_revenue, SQL_DISJUNCTIVE_REVENUE),
+    "product_profit": (q_product_profit, SQL_PRODUCT_PROFIT),
+    "dominant_part_suppliers": (q_dominant_part_suppliers, SQL_DOMINANT_PART_SUPPLIERS),
+    "waiting_suppliers": (q_waiting_suppliers, SQL_WAITING_SUPPLIERS),
 }

@@ -32,19 +32,17 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state_store: bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) the singleton SparkSession with scale-aware defaults.
 
-    rocksdb_state_store=True (or env SPARK_GRAFT_ROCKSDB=1) selects the
-    RocksDB state-store provider for streaming stateful operators — the
-    disk-backed store that holds billions of keys per executor, matching the
-    reference's persistent changelog-backed stores (ABBankTopology.java:67-71).
-    Default stays HDFSBackedStateStore (in-memory) for small test state.
+    Streaming stateful operators use the default HDFSBackedStateStore
+    (in-memory) for small test state. For the disk-backed store that holds
+    billions of keys per executor, matching the reference's persistent
+    changelog-backed stores (ABBankTopology.java:67-71), pass
+    ``extra_conf={"spark.sql.streaming.stateStore.providerClass":
+    ROCKSDB_PROVIDER}``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if rocksdb_state_store is None:
-        rocksdb_state_store = os.environ.get("SPARK_GRAFT_ROCKSDB", "") == "1"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -67,10 +65,6 @@ def get_spark(
         # the final JSON line out of it
         .config("spark.ui.showConsoleProgress", "false")
     )
-    if rocksdb_state_store:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -17,11 +17,11 @@ Delta/Iceberg MERGE with no operator change.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from cdc_stream_processor_spark import cdc
+from cdc_stream_processor_spark.plans.layout import publish_with_audit, restore_parked
 
 
 def merge_batch_into_parquet(
@@ -37,17 +37,16 @@ def merge_batch_into_parquet(
 
     Reads the current snapshot (empty on first batch), applies the batch
     via cdc.apply_changes (latest change per key wins; op 'd' deletes),
-    writes to a scratch dir, then swaps directories — so readers never see
-    a partial table and re-running the same batch reproduces the identical
-    snapshot (asserted in tests).
+    publishes it with ``plans.layout.publish_with_audit`` (stage, then
+    directory swap) — so readers never see a partial table and re-running
+    the same batch reproduces the identical snapshot (asserted in tests).
 
-    Crash recovery: a process dying between the two renames leaves the
-    snapshot parked at ``.__old__`` with no target dir; without the entry
-    recovery below, the next batch would silently treat the table as empty
-    and rebuild from scratch, dropping all merged history."""
-    old = f"{target_dir}.__old__"
-    if not os.path.isdir(target_dir) and os.path.isdir(old):
-        os.rename(old, target_dir)
+    Crash recovery: a process dying between the two renames of the swap
+    leaves the snapshot parked at ``.__old__`` with no target dir; it is
+    restored before the snapshot read, or the next batch would silently
+    treat the table as empty and rebuild from scratch, dropping all merged
+    history."""
+    restore_parked(target_dir)
     if os.path.isdir(target_dir):
         snapshot = spark.read.parquet(target_dir).select(*snapshot_cols)
     else:
@@ -55,15 +54,7 @@ def merge_batch_into_parquet(
             [], batch.select(*snapshot_cols).schema
         )
     merged = cdc.apply_changes(snapshot, batch, key=key, seq=seq, op_col=op_col)
-    tmp = f"{target_dir}.__tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(target_dir):
-        os.rename(target_dir, old)
-    os.rename(tmp, target_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    publish_with_audit(merged, target_dir, checks=[])
 
 
 def start_merge_sink(

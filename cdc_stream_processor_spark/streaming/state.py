@@ -90,7 +90,9 @@ def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
     """Streaming balance reconciliation over parsed transactions.
 
     Input: cdc.parse_transactions output (streaming or batch DataFrame).
-    Runs on any state-store provider (HDFS-backed default, RocksDB opt-in).
+    Runs on any state-store provider: the HDFS-backed default, or RocksDB
+    when ``spark.sql.streaming.stateStore.providerClass`` is set to
+    ``session.ROCKSDB_PROVIDER``.
     """
     return _eligible(txns).groupBy("account_id").applyInPandasWithState(
         _reconcile_group,

@@ -1,7 +1,7 @@
 """Corpus-construction operators (operators.corpus): split, decontamination,
 sequence packing, embedding quantization — semantic properties plus the plan
 shapes that make them 100 TB-safe. Oracle parity itself is the driver gate
-(queries_corpus ORACLES)."""
+(queries_corpus QUERIES oracle SQL)."""
 
 from __future__ import annotations
 

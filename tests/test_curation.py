@@ -435,14 +435,12 @@ def test_shingles_fold_path_survives_short_docs(spark):
     assert nov[5].n_novel == 3 and nov[6].n_novel == 0
     assert C.novelty_curve(docs).count() >= 1
 
-    # minhashes / ngram_jaccard_pairs on the pure-Catalyst fold form
-    mh = D.minhashes(docs, vectorized=False)
+    # minhashes / ngram_jaccard_pairs: short docs yield no signature rows
+    mh = D.minhashes(docs)
     assert {r.doc_id for r in mh.filter("size(hs) > 0").collect()} == {5, 6}
     jac = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(
-            docs, threshold=0.5, vectorized=False
-        ).collect()
+        for r in D.ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
     assert jac == {(5, 6): 1.0}
 

@@ -1,6 +1,6 @@
 """Heavy hitters (Misra-Gries candidates + exact recount), deterministic
 stratified sampling, and retraction-stream aggregate maintenance. Oracle
-parity is the driver gate (queries_corpus / queries ORACLES); these tests
+parity is the DuckDB oracle gate (queries_corpus / queries QUERIES); these tests
 pin the semantic guarantees and the plan shapes that hold at scale."""
 
 from __future__ import annotations

@@ -6,6 +6,11 @@ shuffle, codegen break) fails CI — not just a slow bench run later.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+import sys
+
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_stream_processor_spark import queries_relational as QR
@@ -309,15 +314,34 @@ def test_registry_plan_hygiene_no_rowwise_python(spark, sf_dir):
     assert nested == []
 
 
-def test_registry_every_query_has_an_oracle():
+def test_registry_every_query_has_an_oracle(monkeypatch):
     """The driver records a weaker rows-only check for oracle-less
     queries; keep the registry at 100% oracle coverage so every operator
-    has an external verdict."""
+    has an external verdict. Every ``queries*`` module is registered, no
+    name is registered twice (a second entry would overwrite the first),
+    and a module that cannot import fails the registry instead of
+    silently shrinking it."""
     import __spark_entry__ as entry
+    import cdc_stream_processor_spark as pkg
+
+    with monkeypatch.context() as mp:
+        mp.setitem(sys.modules, f"{pkg.__name__}.queries_linkage", None)
+        mp.delattr(pkg, "queries_linkage", raising=False)
+        with pytest.raises(ImportError):
+            entry.queries()
+        with pytest.raises(ImportError):
+            entry.oracle_sql()
 
     qs, oracles = entry.queries(), entry.oracle_sql()
     assert sorted(qs) == sorted(oracles)
     assert len(qs) >= 85
+    modules = [
+        importlib.import_module(f"{pkg.__name__}.{m.name}")
+        for m in pkgutil.iter_modules(pkg.__path__)
+        if m.name.startswith("queries")
+    ]
+    assert len(modules) == 9
+    assert len(qs) == sum(len(m.QUERIES) for m in modules)
 
 
 def test_runtime_bloom_filter_semi_reduces_fact_side(spark, sf_dir):

@@ -324,8 +324,6 @@ def main() -> int:
         for name, fn in qs.items():
             if only and name not in only:
                 continue
-            if name not in oracles:
-                continue  # rows-only queries have no cross-engine twin
             t0 = time.time()
             s_err = d_err = None
             try:

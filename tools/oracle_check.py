@@ -71,7 +71,7 @@ def main() -> int:
                 for f in sdf.schema.fields
                 if f.dataType.typeName() in ("array", "map", "struct")
             ]
-            if nested and name in oracles:
+            if nested:
                 print(
                     f"FAIL {name}: Spark output has nested column(s) "
                     f"{nested} — serialize (array_join/concat_ws) for the gate"
@@ -83,9 +83,6 @@ def main() -> int:
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"ok~  {name}: rows={len(srows)} (rows-only, no oracle)")
             continue
         try:
             # The external gate hashes DuckDB's native output; HUGEINT
