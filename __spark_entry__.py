@@ -36,219 +36,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # with no manual list to maintain.
 
 
-# Queries whose implementation changed AFTER their last green verdict:
-# treated as never-green so the next driver window re-verifies the NEW
-# code path (a stale green would otherwise certify code it never ran).
-# SELF-CLEARING (r10): each entry records the ROUND the code changed in
-# (current round = newest committed CORRECTNESS round + 1); a name whose
-# last green is >= that round has re-earned its verdict on the new code
-# and is ignored automatically — no manual removal step, no burned window
-# slot on the one-round lag (judge nit r8+r9), and a change made THIS
-# round can never be masked by last round's green.
-_FORCE_RECHECK: dict[str, int] = {
-    # r10: the shared Arrow signature kernel (dedup._vectorized_signatures)
-    # gained the all-dropped-batch guard (pre-fix: a batch where every doc
-    # has no shingles yields mistyped empty columns → ArrowNotImplementedError
-    # crashes the job — the short-doc-heavy-corpus case at scale). The 13
-    # queries below execute that kernel (verified by instrumented runs at
-    # sf0.001); their prior greens never ran the guarded code path.
-    "bloom_decontaminate": 10,
-    "contamination_report": 10,
-    "contrastive_triplets": 10,
-    "decontamination_overlap": 10,
-    "dedup_clusters": 10,
-    "dup_cluster_sizes": 10,
-    "dup_rate_by_source": 10,
-    "incremental_dedup": 10,
-    "lsh_recall_eval": 10,
-    "minhash_dedup_kept": 10,
-    "minhash_est_vs_exact": 10,
-    "minhash_lsh_pairs": 10,
-    "ngram_jaccard_pairs": 10,
-    # r10 (second kernel guard): texthash.shingles gained the n >= k guard
-    # (pre-fix: Spark's sequence(1, n-k+1) REVERSES into [1, 0] for a
-    # sub-k-token doc, so element_at indexed past the token array and one
-    # short doc crashed the whole query under ANSI mode — found by the new
-    # containment_pairs hypothesis differential; the DuckDB twin was always
-    # empty-safe). The 3 queries below are the registered consumers of the
-    # Catalyst shingles() expression (identified by analyzed-plan probe
-    # over all 243 queries); results are byte-identical wherever the old
-    # code didn't crash.
-    "containment_pairs": 10,
-    "ngram_novelty": 10,
-    "novelty_curve": 10,
-    # r10 (same sequence-reversal class, second site): similarity.rp_project
-    # gained the empty-vector guard — an empty embedding array (failed
-    # upstream inference) crashed the projection the same way; the DuckDB
-    # twin (list_prepend(0.0) + empty-safe generate_series) always returned
-    # 0.0 and the guard now matches it.
-    "rp_project": 10,
-    # r10 (third robustness guard): graph.pagerank now returns the empty
-    # rank vector for an empty graph instead of a driver-side
-    # ZeroDivisionError in the teleport division — reachable through
-    # textrank_keywords whenever min_cooc prunes the co-occurrence graph
-    # empty (tiny/templated corpora; found by the textrank hypothesis
-    # replay). The 2 registered pagerank consumers:
-    "knn_pagerank": 10,
-    "textrank_keywords": 10,
-    # r10 (degenerate-row stress audit: all 243 queries run against a
-    # fixture whose ROWS are degenerate — empty/NULL/short texts, empty
-    # and zero embeddings, zero weights — the realistic 100 TB hazard the
-    # driver testdata never carries). Five more row-level guards, each
-    # byte-identical on data the old code didn't crash on, each
-    # DuckDB-parity-checked (float/0 is NULL in DuckDB):
-    "bigram_lift_topk": 10,      # sequence-reversal on sub-2-token docs
-    # (high_value_enriched's r10 entry — the '#'-less-name guard — is
-    # superseded by its r11 bump below)
-    "centroid_pair_sim": 10,     # fold cosine ÷0 on zero vectors → NULL
-    "weighted_sample": 10,       # u/0 on zero-weight rows → excluded,
-    #                              oracle carries the same WHERE
-    "order_value_gini": 10,      # gini ÷0 on a zero-total group → NULL
-    # r11 (ADVICE fixes): embedding_outliers orders by the now-nullable
-    # centroid_sim with asc_nulls_last (Spark asc() is NULLS FIRST, the
-    # DuckDB oracle's ASC default is NULLS LAST — a zero-norm vector
-    # would have diverged top-k membership between engines);
-    # ivf_recall_eval's recall denominator guard rewritten to
-    # when(nq * TOPK > 0) dropping the dead-path 'or 1' fallback.
-    "embedding_outliers": 11,
-    "ivf_recall_eval": 11,
-    # r11 (unicode/pathological-token stress, the new --unicode mode of
-    # tools/degenerate_stress.py): typo_pairs caps FastSS candidacy at
-    # TYPO_MAX_TOKEN_LEN=24 chars on BOTH engine sides — the ≤2-deletion
-    # neighborhood is O(len²) per token, and ONE 2000-char base64 blob
-    # token (ubiquitous in web corpora) exploded into ~2M variants and
-    # OOM'd the variant-join build side. Byte-identical on all driver
-    # testdata (max token length there is 8).
-    "typo_pairs": 11,
-    # embedding_health_audit: its embedding_dim helper (sources/batch.py)
-    # now scans for the first NON-empty vector instead of bailing on an
-    # empty first row — the audit operator itself was the main casualty.
-    # The other embedding_dim consumers (lsh_ann_topk, dbscan_labels,
-    # embedding_near_dup*) return the identical dim on any fixed-dim
-    # table (construction-time helper, pinned by its own planted unit
-    # test) and keep their greens.
-    # (bumped 10 → 11: the r11 divergence audit also changed its ORACLE —
-    # TRY_CAST, see below)
-    "embedding_health_audit": 11,
-    # r11 (cross-engine divergence audit, tools/divergence_stress.py —
-    # Spark-vs-DuckDB parity over the pathological fixtures, the silent
-    # sibling of the crash audit). Four real divergences fixed:
-    # event_type_correlation guarded its zero-variance Pearson
-    # denominator (ANSI DIVIDE_BY_ZERO on Spark vs NULL on DuckDB — a
-    # single-day calendar crashed the engine side); cdc_parse's oracle
-    # normalizes IEEE -0.0 money (Java-BigDecimal/Spark round() has no
-    # signed zero — the engine side is the behavior of record);
-    # embedding_health_audit's oracle TRY_CASTs the grid value (the twin
-    # died on the exact non-finite class the audit exists to flag);
-    # ivf_recall_eval's oracle emits its one report row even for an
-    # empty query set (GROUP BY over zero rows emitted zero rows vs the
-    # engine's ungrouped agg). All byte-identical on driver testdata.
-    "event_type_correlation": 11,
-    "cdc_parse": 11,
-    # r11 (same audit, fixed-mode fixture — NULL/empty-document parity):
-    # text_profile's oracle returned fingerprint 0 for a NULL document
-    # (fold seed survives list_prepend over NULL) vs the engine's NULL;
-    # boilerplate_removal's oracle NULLed the clean_text of an EMPTY
-    # document (DuckDB array_to_string([]) is NULL, Spark array_join([])
-    # is ''); multimodal_frame_sample's oracle propagated NULL for a
-    # NULL-payload media row where the engine's decode stub emits one
-    # empty frame. All byte-identical on driver testdata (no NULL/empty
-    # documents there).
-    "text_profile": 11,
-    "boilerplate_removal": 11,
-    "multimodal_frame_sample": 11,
-    # r11 (same audit, empty-regime + dim/JSON oracle parity):
-    # conversion_lag_quantiles' oracle GROUP BY emitted zero rows when
-    # nobody converts (engine emits its one report row);
-    # json_props_rollup's oracle raised on malformed JSON the engine maps
-    # to the all-NULL struct (json_valid guard); embedding_gram's oracle
-    # hardcoded the 64-dim corpus constant instead of deriving the grid
-    # from the data (2080 NULL-padded cells over a 4-dim table).
-    "conversion_lag_quantiles": 11,
-    "json_props_rollup": 11,
-    "embedding_gram": 11,
-    # r11 (temporal fixture — REAL engine bug + bucket parity):
-    # ewma_event_rate computed day_idx via floor(us / DAY_US) in DOUBLE —
-    # off by one day on pre-epoch rows (floor vs truncating int div) and
-    # on any row within ~0.15 ms of midnight (the double quotient rounds
-    # up across the boundary: latent even on clean data); now the same
-    # exact int64 `div` every other day-bucket operator uses. The three
-    # seasonal oracles bucketed pre-epoch days with DuckDB's sign-keeping
-    # % (dow -6..-1) vs the engine's pmod 0..6 — now the ((d%p)+p)%p form.
-    "ewma_event_rate": 11,
-    "seasonal_decompose": 11,
-    "seasonal_anomalies": 11,
-    "seasonal_by_type": 11,
-    # acf_daily's oracle now LEFT JOINs the lagged partner so a lag with
-    # no pairs still reports its row (n_pairs 0, NULL acf) — the engine
-    # always emits all ACF_MAX_LAG rows; the old inner join emitted none
-    # on a single-day series.
-    "acf_daily": 11,
-    # r11 (randomized cross-engine parity differentials — the hypothesis
-    # generalization of the fixed pathological fixtures — found two more
-    # silent divergences on their FIRST runs): the three hopping-window
-    # oracles bucketed pre-epoch events with DuckDB's truncating //
-    # (hop start 0) where Spark's window() floors (start -2h) — now the
-    # ((us % hop) + hop) % hop floor form, byte-identical for us >= 0;
-    # high_value_enriched's oracle rendered an UNMATCHED customer's name
-    # as a bare ' ' (DuckDB split_part(NULL,..) returns '' so the
-    # COALESCE never fired) where the engine renders 'N/A'.
-    "hopping_event_counts": 11,
-    "hopping_active_users": 11,
-    "trending_event_types": 11,
-    "high_value_enriched": 11,
-    # r12 (unguarded-denominator sweep, the r11 verdict's task 1-2):
-    # every Spark-side `/` whose denominator is a data-derived
-    # aggregate/hash now uses F.try_divide so a zero denominator ships
-    # NULL exactly as DuckDB's /0 does instead of dying with ANSI
-    # DIVIDE_BY_ZERO. Sites: revenue_mom_growth (zero-revenue lag month —
-    # the judge's falsifying draw, pinned as @example), approx_distinct_
-    # users (KMV bottom-k max hash 0 — judge-named sibling),
-    # nation_revenue_share (zero-revenue region, found by the new
-    # all-zero-group numeric fixture), forecast_backtest (APE vs a
-    # zero-revenue actual), promo_revenue / market_share (zero ship-month
-    # / order-year), acf_daily (zero-variance series: den=0, num=0).
-    # Clean-data results are bit-identical; rechecked because the code
-    # changed.
-    "revenue_mom_growth": 12,
-    "approx_distinct_users": 12,
-    "nation_revenue_share": 12,
-    "forecast_backtest": 12,
-    "promo_revenue": 12,
-    "market_share": 12,
-    "acf_daily": 12,
-    # ewma_smooth's num/den also try_divides now (a NULL value row's
-    # entire lag frame is NULL -> den exactly 0.0); unreachable from
-    # ewma_event_rate's count inputs but the operator code changed.
-    "ewma_event_rate": 12,
-    # temperature_sample's driver-side stratum sort is now None-safe
-    # NULLS-LAST (the r12 --nulls fixture found plain sorted() dying on
-    # a NULL lang with TypeError None < str); byte-identical on NULL-free
-    # strata but the operator code changed.
-    "temperature_sample": 12,
-    # r12 --nulls divergence triage (13 real fixes — NULL join keys,
-    # NULL event times, NULL money, NULL vectors): every query below had
-    # engine and/or oracle changed to agree on the NULL semantics; all
-    # byte-identical on NULL-free data but rechecked because code/oracle
-    # changed. embedding_health_audit additionally GAINS the n_null
-    # column (the audit now counts whole-missing vectors — its output
-    # schema changed on both engines).
-    "embedding_health_audit": 12,
-    "quantize_embeddings": 12,
-    "hopping_event_counts": 12,
-    "hopping_active_users": 12,
-    "trending_event_types": 12,
-    "retraction_aggregate": 12,
-    "user_event_paths": 12,
-    "events_asof_orders": 12,
-    "survival_curve": 12,
-    "bootstrap_ci_revenue": 12,
-    "rfm_scores": 12,
-    "sketch_quantiles": 12,
-}
-
-
-def _rotation_order(names: list[str]) -> list[str]:
+def _last_green() -> dict[str, int]:
+    """name -> newest round whose committed CORRECTNESS_r*.json verdict is
+    green: no error, rows and schema match, and hash_match true or null
+    (rows-only checks report null; they count as a weak green so those
+    queries rotate normally)."""
     import glob
     import json
     import re
@@ -268,24 +60,19 @@ def _rotation_order(names: list[str]) -> list[str]:
         if not isinstance(data, dict):
             continue
         for name, rec in data.items():
-            if not isinstance(rec, dict) or rec.get("err"):
-                continue
-            green = (
-                rec.get("rows_match")
+            if (
+                isinstance(rec, dict)
+                and not rec.get("err")
+                and rec.get("rows_match")
                 and rec.get("schema_match")
-                # rows-only (no-oracle) checks report hash_match null —
-                # count them as (weak) green so they rotate normally
                 and rec.get("hash_match") in (True, None)
-            )
-            if green:
+            ):
                 last_green[name] = max(last_green.get(name, -1), rnd)
-    for name, changed_rnd in _FORCE_RECHECK.items():
-        # Self-clear: a green from the change round (or later) ran the new
-        # code; only names still awaiting such a green are demoted. A green
-        # OLDER than the change round never certifies the new code, however
-        # recent it is.
-        if last_green.get(name, -1) < changed_rnd:
-            last_green.pop(name, None)
+    return last_green
+
+
+def _rotation_order(names: list[str]) -> list[str]:
+    last_green = _last_green()
     idx = {n: i for i, n in enumerate(names)}
     return sorted(names, key=lambda n: (last_green.get(n, -1), idx[n]))
 

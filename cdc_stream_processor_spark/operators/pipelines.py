@@ -160,6 +160,17 @@ def dormancy_candidates(
     )
 
 
+def balance_eligible(txns: DataFrame) -> DataFrame:
+    """P9 — balance-reconciliation input, shared by the batch twin and the
+    stateful stream (ABBankTopology.java:311-313): COMPLETED txns with a
+    non-negative balance_after."""
+    return txns.filter(
+        is_completed(F.col("transaction_status"))
+        & F.col("balance_after").isNotNull()
+        & (F.col("balance_after") >= 0)
+    )
+
+
 def balance_reconciliation_batch(
     txns: DataFrame,
     tolerance: float = BALANCE_TOLERANCE,
@@ -177,16 +188,11 @@ def balance_reconciliation_batch(
       status    = HIGH discrepancy alert if |balance_before - expected| >
                   tolerance else LOW confirmation (:79-81,96-125)
 
-    Only COMPLETED txns with non-negative balance_after participate (P9,
-    ABBankTopology.java:311-313).
+    Only balance_eligible txns participate (P9).
     """
     from pyspark.sql.window import Window
 
-    eligible = txns.filter(
-        is_completed(F.col("transaction_status"))
-        & F.col("balance_after").isNotNull()
-        & (F.col("balance_after") >= 0)
-    )
+    eligible = balance_eligible(txns)
     w = Window.partitionBy("account_id").orderBy("initiated_at", "transaction_id")
     expected = F.coalesce(
         F.lag("balance_after").over(w), F.col("balance_before")

@@ -802,13 +802,26 @@ SEASON_PERIOD = 7  # weekly seasonality on the daily series
 TREND_HALF = 3  # centered 7-day moving-average trend
 
 
-def _calendar_spine(daily: DataFrame) -> DataFrame:
-    """Gap-free calendar spine from a (day, cnt) daily aggregate: explode
-    the [min, max] day range, left-join the observed counts, zero-fill.
+def _daily_counts(events: DataFrame, ts_col: str) -> DataFrame:
+    """(day, cnt) daily event counts, day = exact int64 epoch-day of
+    ``ts_col`` (truncating ``div``, as every day-bucket operator uses)."""
+    return (
+        events.select(
+            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
+        )
+        .groupBy("day")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _calendar_spine(events: DataFrame, ts_col: str) -> DataFrame:
+    """Gap-free calendar spine of the daily event counts: explode the
+    [min, max] day range, left-join the observed counts, zero-fill.
     PERSISTED — every series operator that builds a spine consumes it from
     several branches (windows, medians, bounds), and uncached each branch
     re-runs the events scan + daily aggregate; the cached relation is
     calendar-scale (one skinny row per day)."""
+    daily = _daily_counts(events, ts_col)
     return (
         daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
         .select(F.explode(F.sequence("lo", "hi")).alias("day"))
@@ -842,14 +855,7 @@ def seasonal_decompose(
     (day, cnt, trend, seasonal, residual).
     """
     period, half = SEASON_PERIOD, TREND_HALF
-    daily = (
-        events.select(
-            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    spine = _calendar_spine(daily)
+    spine = _calendar_spine(events, ts_col)
     w = Window.orderBy("day").rowsBetween(-half, half)
     full = (
         spine.withColumn("sum_w", F.sum("cnt").over(w))
@@ -907,14 +913,7 @@ def acf_daily(
     """
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
-    daily = (
-        events.select(
-            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    spine = _calendar_spine(daily)
+    spine = _calendar_spine(events, ts_col)
     # (n, S) as unbounded-window aggregates over the SAME single-partition
     # pass the lead() columns need — no separate scalar agg, no second
     # spine reference, one Exchange SinglePartition for everything
@@ -992,14 +991,7 @@ def cusum_changepoint(
     prefix-sum window runs unpartitioned but on the calendar-bounded
     aggregate, and the top-k is a TakeOrderedAndProject.
     """
-    daily = (
-        events.select(
-            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    spine = _calendar_spine(daily)
+    spine = _calendar_spine(events, ts_col)
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     pref = spine.select(
         "day",
@@ -1176,14 +1168,7 @@ def rolling_median_daily(
     Scale: the explode is 7× the CALENDAR-sized daily aggregate, not the
     corpus.
     """
-    daily = (
-        events.select(
-            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    spine = _calendar_spine(daily)
+    spine = _calendar_spine(events, ts_col)
     width = 2 * half + 1
     exploded = spine.select(
         F.explode(
@@ -1557,14 +1542,7 @@ def pattern_match_daily(
     windows overlapping the pattern window are excluded.  Returns
     (start_day, corr) ordered by corr desc, start_day asc.
     """
-    daily = (
-        events.select(
-            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    spine = _calendar_spine(daily)
+    spine = _calendar_spine(events, ts_col)
     # windows: start day s covers offsets 0..w-1
     win = spine.select(
         F.explode(F.sequence(F.lit(0), F.lit(w - 1))).alias("off"),
@@ -2810,13 +2788,7 @@ def theil_sen_daily(
     Returns one row: (n_days, n_pairs, ts_slope_per_day, med_day_a,
     med_day_b).
     """
-    daily = (
-        events.select(
-            F.expr(f"unix_micros({ts_col}) div {DAY_US}").alias("day")
-        )
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    daily = _daily_counts(events, ts_col)
     a = daily.select(F.col("day").alias("da"), F.col("cnt").alias("ca"))
     b = daily.select(F.col("day").alias("db"), F.col("cnt").alias("cb"))
     slopes = a.join(b, F.col("da") < F.col("db")).select(

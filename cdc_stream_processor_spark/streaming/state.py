@@ -22,11 +22,13 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-BALANCE_TOLERANCE = 0.01
+from cdc_stream_processor_spark.operators.pipelines import (
+    BALANCE_TOLERANCE,
+    balance_eligible,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -73,19 +75,6 @@ def _reconcile_group(
     yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
 
 
-def _eligible(txns: DataFrame) -> DataFrame:
-    """P9 eligibility (ABBankTopology.java:311-313): COMPLETED with
-    non-negative balance_after."""
-    return txns.filter(
-        (F.col("transaction_status") == "COMPLETED")
-        & F.col("balance_after").isNotNull()
-        & (F.col("balance_after") >= 0)
-    ).select(
-        "account_id", "transaction_id", "balance_before", "balance_after",
-        "initiated_at",
-    )
-
-
 def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
     """Streaming balance reconciliation over parsed transactions.
 
@@ -94,7 +83,11 @@ def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
     when ``spark.sql.streaming.stateStore.providerClass`` is set to
     ``session.ROCKSDB_PROVIDER``.
     """
-    return _eligible(txns).groupBy("account_id").applyInPandasWithState(
+    rows = balance_eligible(txns).select(
+        "account_id", "transaction_id", "balance_before", "balance_after",
+        "initiated_at",
+    )
+    return rows.groupBy("account_id").applyInPandasWithState(
         _reconcile_group,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

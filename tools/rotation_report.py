@@ -2,16 +2,14 @@
 will check next round, and how stale every other green is.
 
 The registry (``__spark_entry__.queries()``) is emitted in rotation order
-— never-green / force-rechecked names first, then ascending last-green
-round — and the driver verifies the FIRST 50 entries per round. Every
-round's planning starts with the same questions, so this prints them:
+— never-green names first, then ascending last-green round — and the
+driver verifies the FIRST 50 entries per round. Every round's planning
+starts with the same questions, so this prints them:
 
 - the window's composition (which names, which age cohort each is from),
 - the age histogram of the whole registry (how much backlog each future
   round must retire),
-- the force-recheck state after self-clearing (r10: a name green in the
-  newest CORRECTNESS record keeps its verdict automatically),
-- how many free slots a new query or a code change would consume.
+- how many free slots a new query would consume.
 
 Usage: ``python tools/rotation_report.py [--window N]`` (default 50).
 Reads only committed CORRECTNESS_r*.json files — no Spark session.
@@ -20,41 +18,12 @@ Reads only committed CORRECTNESS_r*.json files — no Spark session.
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
 import sys
 from collections import Counter
 
 BASE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, BASE)
-
-
-def last_green_by_query() -> tuple[dict[str, int], int]:
-    """(name -> newest green round, newest round seen) from the committed
-    CORRECTNESS records — the same green rule the rotation uses."""
-    greens: dict[str, int] = {}
-    newest = -1
-    for path in glob.glob(os.path.join(BASE, "CORRECTNESS_r*.json")):
-        try:
-            rnd = int(os.path.basename(path).rsplit("_r", 1)[1].split(".")[0])
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError, IndexError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        newest = max(newest, rnd)
-        for name, rec in data.items():
-            if (
-                isinstance(rec, dict)
-                and not rec.get("err")
-                and rec.get("rows_match")
-                and rec.get("schema_match")
-                and rec.get("hash_match") in (True, None)
-            ):
-                greens[name] = max(greens.get(name, -1), rnd)
-    return greens, newest
 
 
 def main() -> int:
@@ -64,49 +33,38 @@ def main() -> int:
 
     import __spark_entry__ as entry
 
-    greens, newest = last_green_by_query()
+    greens = entry._last_green()
+    newest = max(greens.values(), default=-1)
     names = list(entry.queries())  # rotation order
-    # dict: name -> round the code changed in; cleared once a green from
-    # that round (or later) exists
-    force = dict(getattr(entry, "_FORCE_RECHECK", {}) or {})
-    cleared = {n for n, rnd in force.items() if greens.get(n, -1) >= rnd}
-    active_force = set(force) - cleared
 
     def age(n: str) -> int:
-        if n in active_force:
-            return -1  # demoted: treated never-green
-        return greens.get(n, -1)
+        return greens.get(n, -1)  # -1: never green
 
     window = names[: args.window]
     rest = names[args.window:]
 
-    print(f"registry: {len(names)} queries, newest CORRECTNESS round r{newest}")
-    print(
-        f"force-recheck: {sorted(force) or '{}'}"
-        + (f"  (self-cleared: {sorted(cleared)})" if cleared else "")
-    )
+    print(f"registry: {len(names)} queries, newest green round r{newest}")
     print(f"\nnext driver window ({len(window)} slots):")
     for cohort, cnt in sorted(Counter(age(n) for n in window).items()):
-        label = "never-green/force" if cohort < 0 else f"last green r{cohort}"
+        label = "never-green" if cohort < 0 else f"last green r{cohort}"
         print(f"  {cnt:3d} × {label}")
     print("  " + ", ".join(window[:8]) + (", …" if len(window) > 8 else ""))
 
     print(f"\nbacklog beyond the window ({len(rest)} queries):")
     for cohort, cnt in sorted(Counter(age(n) for n in rest).items()):
-        label = "never-green/force" if cohort < 0 else f"last green r{cohort}"
+        label = "never-green" if cohort < 0 else f"last green r{cohort}"
         print(f"  {cnt:3d} × {label}")
 
     if window:
         oldest_in_window = min(age(n) for n in window)
         slack = sum(1 for n in window if age(n) > oldest_in_window)
         label = (
-            "never-green/force"
+            "never-green"
             if oldest_in_window < 0
             else f"r{oldest_in_window}"
         )
         print(
-            f"\nslack: {slack} — additions (new queries / changed-code"
-            f" force-rechecks outside the window) before the {label} cohort"
+            f"\nslack: {slack} — new queries before the {label} cohort"
             " loses a window slot"
         )
     never = [n for n in names if greens.get(n, -1) < 0]
