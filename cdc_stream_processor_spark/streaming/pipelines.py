@@ -150,17 +150,25 @@ def effectively_once_transactions(
 # --- notification builders (M5-M8) — shared JSON output shape ---------------
 
 
+def _notification_id() -> F.Column:
+    """A v4 UUID string per row, taken from the JVM like
+    NotificationEvent's ``UUID.randomUUID()``. Spark's ``uuid()`` would
+    write a fresh seed into the generated code of every micro-batch, so
+    the output stage would recompile once per batch."""
+    return F.expr("reflect('java.util.UUID', 'randomUUID')")
+
+
 def _notification(
     ntype: str, severity, channel: str, subject: F.Column, body: F.Column,
     account_id: F.Column, event_time: F.Column, metadata: F.Column,
 ) -> F.Column:
     """NotificationEvent.toJson analog (NotificationEvent.java:18-95):
-    uuid id, wall-clock generatedAt, nulls omitted by to_json.
+    per-row uuid id and wall-clock generatedAt, nulls omitted by to_json.
     `severity` may be a literal string or a Column expression."""
     sev = F.lit(severity) if isinstance(severity, str) else severity
     return F.to_json(
         F.struct(
-            F.expr("uuid()").alias("notificationId"),
+            _notification_id().alias("notificationId"),
             F.lit(ntype).alias("notificationType"),
             sev.alias("severity"),
             F.lit(channel).alias("channel"),
@@ -168,8 +176,14 @@ def _notification(
             subject.alias("subject"),
             body.alias("body"),
             F.date_format(event_time, "yyyy-MM-dd'T'HH:mm:ssXXX").alias("eventTime"),
+            # wall clock per row, like NotificationEvent's Instant.now();
+            # current_timestamp() is a per-batch literal in the generated
+            # code and would recompile this stage on every batch
             F.date_format(
-                F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ssXXX"
+                F.timestamp_millis(F.expr(
+                    "reflect('java.lang.System', 'currentTimeMillis')"
+                ).cast("long")),
+                "yyyy-MM-dd'T'HH:mm:ssXXX",
             ).alias("generatedAt"),
             metadata.alias("metadata"),
         )
@@ -327,7 +341,7 @@ def balance_notifications(txns: DataFrame) -> DataFrame:
         F.col("account_id").cast("string").alias("key"),
         F.to_json(
             F.struct(
-                F.expr("uuid()").alias("notificationId"),
+                _notification_id().alias("notificationId"),
                 F.lit("BALANCE_UPDATE").alias("notificationType"),
                 F.col("severity").alias("severity"),
                 F.lit("EMAIL").alias("channel"),

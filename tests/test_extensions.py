@@ -1785,6 +1785,40 @@ def test_kcenter_fewer_points_than_k(spark):
     assert [r.vec_id for r in out] == [1, 2]  # stops when ids exhaust
 
 
+def test_kcenter_runs_one_job_per_round(spark):
+    """Each round's lazy localCheckpoint is filled by that round's argmin
+    probe, which computes every partition: a round costs exactly one job.
+    A probe that stopped reading every partition would leave checkpoint
+    blocks missing, and the next round would pay a catch-up job."""
+    import math
+
+    from cdc_stream_processor_spark.operators.similarity import (
+        kcenter_centers,
+    )
+
+    # a local relation of 40 rows spreads over several partitions with no
+    # shuffle, so every job below is a seed or probe job
+    df = spark.createDataFrame(
+        [(i, [math.cos(i), math.sin(i)]) for i in range(1, 41)],
+        "vec_id long, embedding array<float>",
+    )
+    sc = spark.sparkContext
+
+    def jobs(k):
+        group = f"kcenter-one-job-per-round-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            assert len(kcenter_centers(df, k=k).collect()) == k
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # k = 1 runs only the seed pick; every further center is one round
+    seed = jobs(1)
+    assert [jobs(k) - seed for k in (2, 4)] == [1, 3]
+
+
 def test_resize_images_letterbox_math(spark):
     """Resize plan: dims replay the stub decode from sha256 bytes; out
     dims are floor(side * min-scale) and fit inside the target box; the

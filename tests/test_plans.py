@@ -412,6 +412,8 @@ def test_registry_rotation_prioritizes_unverified_queries():
                 and rec.get("hash_match") in (True, None)
             ):
                 greens[name] = max(greens.get(name, -1), rnd)
+    # the rotation's own reading of the records agrees with this one
+    assert greens == entry._last_green()
     ranks = [greens.get(n, -1) for n in names]
     assert ranks == sorted(ranks)  # never-green (-1) first, then ascending
 

@@ -1532,3 +1532,150 @@ def test_corrupt_far_future_event_poisons_watermark_and_audit_detects(
     assert audit.n_post_sane == 1
     assert audit.n_outside_pandas_ns == 1
     assert audit.max_epoch_us == year_9999_us
+
+
+def _codegen_compiles(spark) -> int:
+    """Janino compilations so far in this JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_notification_stage_compiles_once_across_batches(spark, tmpdirs):
+    """The notification id and generatedAt are taken per row from the JVM,
+    so no per-batch seed or timestamp literal enters the generated code:
+    after batch 0, further micro-batches of the same plan add no Janino
+    compilation. Files are staged first and moved into the source between
+    the two runs, so no Spark job compiles anything in between."""
+    import json
+    import os
+    import re
+
+    src, ckpt, stage = f"{tmpdirs}/src", f"{tmpdirs}/ckpt", f"{tmpdirs}/stage"
+    out_dir = f"{tmpdirs}/out"
+    os.makedirs(src)
+    for i in range(5):
+        fx.make_txn_df(
+            spark,
+            [fx.envelope(fx.txn_image(txn_id=float(i + 1), amount=600_000.0,
+                                      initiated_at_us=(1_700_000_000 + i) * US))],
+        ).coalesce(1).write.parquet(f"{stage}/{i}")
+    accounts = cdc.parse_accounts(
+        fx.make_account_df(spark, [fx.account_image(101.0, "ACC-101")])
+    )
+
+    def publish(i):
+        (part,) = [f for f in os.listdir(f"{stage}/{i}") if f.endswith(".parquet")]
+        os.rename(f"{stage}/{i}/{part}", f"{src}/{i}-{part}")
+
+    def run():
+        txns = SP.parsed_transaction_stream(SP.read_file_envelopes(
+            spark, src, source_options={"maxFilesPerTrigger": "1"}))
+        q = SP.start_pipeline(
+            SP.high_value_notifications(txns, accounts), "hv_codegen", ckpt,
+            output_mode="append", sink_format="parquet",
+            sink_options={"path": out_dir}, trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        return [p for p in q.recentProgress if p["numInputRows"] > 0]
+
+    publish(0)
+    assert len(run()) == 1  # batch 0 compiles the plan
+    before = _codegen_compiles(spark)
+    for i in range(1, 5):
+        publish(i)
+    assert len(run()) == 4  # batches 1-4, one file each
+    assert _codegen_compiles(spark) - before == 0
+
+    out = [json.loads(r.value) for r in spark.read.parquet(out_dir).collect()]
+    ids = {v["notificationId"] for v in out}
+    assert len(out) == 5 and len(ids) == 5
+    assert all(
+        re.fullmatch(r"[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}"
+                     r"-[0-9a-f]{12}", i) for i in ids
+    )
+    assert all(
+        re.fullmatch(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d(Z|[+-]\d\d:\d\d)",
+                     v["generatedAt"]) for v in out
+    )
+
+
+def test_checkpoint_default_resumes_with_crc_and_no_temp_files(spark, tmpdirs):
+    """get_spark writes streaming checkpoints through Spark's
+    FileSystem-based manager. A dormancy stream drained in two availableNow
+    runs against one checkpoint emits what one run over the same files and
+    the batch twin emit. Every offset, commit and state file keeps its
+    Hadoop .crc, and no temp file is left behind."""
+    import json
+    import os
+    from collections import Counter
+
+    from cdc_stream_processor_spark.session import CHECKPOINT_FILE_MANAGER
+
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == CHECKPOINT_FILE_MANAGER
+    )
+    t0, hour = 1_700_000_000, 3600
+
+    def txn(i, account, at_s):
+        return fx.envelope(fx.txn_image(
+            txn_id=float(i), account_id=float(account), initiated_at_us=at_s * US))
+
+    first = [txn(1, 101, t0), txn(2, 102, t0 + 600), txn(3, 101, t0 + 1800)]
+    # the flush event (account 999) closes every other session; its own
+    # session never closes, so it is left out of every comparison
+    second = [txn(4, 103, t0 + 3 * hour), txn(5, 102, t0 + 3 * hour + 300),
+              txn(6, 101, t0 + 5 * hour), txn(7, 999, t0 + 20 * hour)]
+
+    def drain(src, ckpt, out):
+        txns = SP.parsed_transaction_stream(SP.read_file_envelopes(spark, src))
+        q = SP.start_pipeline(
+            SP.dormancy_notifications(txns, gap="1 hour"), "dormancy_resume",
+            ckpt, output_mode="append", sink_format="parquet",
+            sink_options={"path": out}, trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    def emitted(rows):
+        out = Counter()
+        for r in rows:
+            if r.key != "999":
+                v = json.loads(r.value)
+                del v["notificationId"], v["generatedAt"]
+                out[(r.key, json.dumps(v, sort_keys=True))] += 1
+        return out
+
+    two_src, two_ckpt = f"{tmpdirs}/two_src", f"{tmpdirs}/two_ckpt"
+    _write_envelopes(spark, two_src, first)
+    drain(two_src, two_ckpt, f"{tmpdirs}/two_out")
+    _write_envelopes(spark, two_src, second)
+    drain(two_src, two_ckpt, f"{tmpdirs}/two_out")
+    two = emitted(spark.read.parquet(f"{tmpdirs}/two_out").collect())
+
+    one_src = f"{tmpdirs}/one_src"
+    _write_envelopes(spark, one_src, first + second)
+    drain(one_src, f"{tmpdirs}/one_ckpt", f"{tmpdirs}/one_out")
+    one = emitted(spark.read.parquet(f"{tmpdirs}/one_out").collect())
+
+    twin = emitted(SP.dormancy_notifications(
+        cdc.parse_transactions(fx.make_txn_df(spark, first + second)),
+        gap="1 hour",
+    ).collect())
+    # single-event sessions: 102 twice, 101 and 103 once (101's first
+    # session holds two events and is no dormancy candidate)
+    assert sum(twin.values()) == 4
+    assert two == one == twin
+
+    ckpt = f"{two_ckpt}/dormancy_resume"
+    for sub in ("offsets", "commits", "state"):
+        files = [
+            (d, f) for d, _, fs in os.walk(f"{ckpt}/{sub}") for f in fs
+            if not f.endswith(".crc")
+        ]
+        assert files, sub
+        for d, f in files:
+            assert os.path.exists(f"{d}/.{f}.crc"), f"{d}/{f}"
+    assert not [
+        f for _, _, fs in os.walk(ckpt) for f in fs if f.endswith(".tmp")
+    ]

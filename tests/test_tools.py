@@ -20,16 +20,14 @@ import rotation_report  # noqa: E402
 
 
 def test_last_green_matches_rotation_rule():
-    """The rotation emits the registry in ascending last-green order
-    (err-free + rows/schema match + hash true-or-null), the order the
-    report's window is read from."""
+    """The report's window is read from the committed CORRECTNESS records
+    through ``_last_green()``; the rotation order it yields is checked in
+    tests/test_plans.py::test_registry_rotation_prioritizes_unverified_queries."""
     import __spark_entry__ as entry
 
     greens = entry._last_green()
     assert greens  # committed records exist
     assert max(greens.values()) >= 9
-    ranks = [greens.get(n, -1) for n in entry.queries()]
-    assert ranks == sorted(ranks)
 
 
 def test_report_prints_window_and_slack(capsys, monkeypatch):
