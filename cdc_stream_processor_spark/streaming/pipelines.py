@@ -21,6 +21,8 @@ raises a clear error in that case; tests use file/memory sources.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -518,6 +520,16 @@ def stream_corpus_gate(
     )
 
 
+def state_partitions(spark: SparkSession) -> int:
+    """Shuffle (and so state-store) partitions of one streaming query: its
+    share of the executor's cores when the five pipelines run together."""
+    return max(1, spark.sparkContext.defaultParallelism // len(SINK_TOPICS))
+
+
+# serializes the conf swap in start_pipeline across threads
+_START_LOCK = threading.Lock()
+
+
 def start_pipeline(
     df: DataFrame,
     name: str,
@@ -528,7 +540,24 @@ def start_pipeline(
     trigger_available_now: bool = False,
 ):
     """Start one named StreamingQuery (reference runs 5 concurrently).
-    sink_format: 'memory' (tests), 'kafka', 'parquet', 'console'."""
+    sink_format: 'memory' (tests), 'kafka', 'parquet', 'console'.
+
+    The query's shuffles, and so its state partitions, number
+    ``state_partitions(spark)``: the cores divided by the five pipelines,
+    at least one (1 on 4 cores, 6 on 32). A trigger carries a few hundred
+    rows, so ``spark.sql.shuffle.partitions`` (the core count) gave every
+    query a task per core per stateful stage: on 4 cores five queries
+    queued about twenty state tasks per trigger round for four slots,
+    each with its state-store commit and, for the balance fold, its own
+    Python set-up. The count is set on the session only while ``writer.start()``
+    copies the session conf into the query, and restored before this
+    returns; other threads that read the session conf meanwhile see it.
+
+    Safe on restart: a new checkpoint records the count in its offset-log
+    metadata, and Spark restores that value whenever the query resumes.
+    State is hash-partitioned by that count, so an existing checkpoint
+    keeps the count it was created with, whatever the rule gives now."""
+    spark = df.sparkSession
     writer = (
         df.writeStream.queryName(name)
         .outputMode(output_mode)
@@ -539,7 +568,13 @@ def start_pipeline(
         writer = writer.option(k, v)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    with _START_LOCK:
+        session_count = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions(spark)))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", session_count)
 
 
 def read_file_envelopes_with_dlq(

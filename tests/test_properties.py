@@ -76,6 +76,107 @@ def test_horner_fold_matches_sequential(values, factor, mod):
     assert FH.horner_fold(np.array(values, dtype=np.int64), factor, mod) == acc
 
 
+class _FakeGroupState:
+    """The part of pyspark's GroupState the balance fold uses."""
+
+    def __init__(self, exists: bool, last: float | None):
+        self.exists = exists
+        self.get = (last,)
+        self.updated: tuple | None = None
+
+    def update(self, value: tuple) -> None:
+        self.updated = value
+
+
+def _reconcile_rowwise(key, batches, state):
+    """The row-at-a-time balance fold: the reference that
+    ``streaming.state._reconcile_group`` must equal."""
+    import pandas as pd
+
+    from cdc_stream_processor_spark.operators.pipelines import BALANCE_TOLERANCE
+    from cdc_stream_processor_spark.streaming.state import OUTPUT_SCHEMA
+
+    (account_id,) = key
+    last = state.get[0] if state.exists else None
+    rows = pd.concat(list(batches), ignore_index=True)
+    rows = rows.sort_values(["initiated_at", "transaction_id"])
+    out = []
+    for r in rows.itertuples(index=False):
+        expected = last if last is not None else r.balance_before
+        disc = round(abs(r.balance_before - expected), 4)
+        out.append({
+            "account_id": account_id,
+            "transaction_id": r.transaction_id,
+            "balance_before": r.balance_before,
+            "balance_after": r.balance_after,
+            "discrepancy": disc,
+            "severity": "HIGH" if disc > BALANCE_TOLERANCE else "LOW",
+        })
+        last = r.balance_after
+    state.update((last,))
+    yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
+
+
+# money in kobo (exact cents, as the feed carries), small values on the
+# fifth decimal (where round(x, 4) and NumPy's round disagree on ties),
+# arbitrary doubles, NaN
+_money = st.one_of(
+    st.integers(0, 10**9).map(lambda kobo: kobo / 100),
+    st.integers(0, 10**5).map(lambda n: n / 10**5),
+    st.floats(0, 1e9, allow_nan=False),
+    st.just(float("nan")),
+)
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.one_of(st.integers(0, 3), st.none()),  # initiated_at (s), ties
+            st.one_of(st.integers(0, 4), st.none()),  # transaction_id, ties
+            _money,                                   # balance_before
+            _money,                                   # balance_after
+        ),
+        min_size=1, max_size=12,
+    ),
+    st.lists(st.integers(0, 12), max_size=3),         # Arrow chunk cuts
+    st.one_of(st.none(), _money),                     # stored balance
+)
+@example([(0, 1, 0.00025, 0.0)], [], 0.0)  # round -> 0.0003, np.round -> 0.0002
+@settings(max_examples=300, deadline=None)
+def test_balance_fold_matches_rowwise(rows, cuts, stored):
+    """The vectorized balance fold returns exactly the rows, discrepancy
+    floats and severities of the row-wise fold, and stores the same
+    balance: over several Arrow chunks, ties on initiated_at broken by
+    transaction_id, null sort keys (sorted last), NaN balances, and with
+    state absent or present. A null transaction_id makes the column
+    float64, as Arrow hands a nullable bigint to pandas."""
+    import pandas as pd
+
+    from cdc_stream_processor_spark.streaming.state import _reconcile_group
+
+    ids = [t for _, t, _, _ in rows]
+    frame = pd.DataFrame({
+        "account_id": 101,
+        "transaction_id": (
+            np.array([np.nan if t is None else t for t in ids])
+            if None in ids else np.array(ids, dtype=np.int64)
+        ),
+        "balance_before": np.array([b for _, _, b, _ in rows], dtype=np.float64),
+        "balance_after": np.array([a for _, _, _, a in rows], dtype=np.float64),
+        "initiated_at": pd.to_datetime([s for s, _, _, _ in rows], unit="s"),
+    })
+    bounds = [0, *sorted(c for c in cuts if c < len(rows)), len(rows)]
+    chunks = [frame.iloc[lo:hi].reset_index(drop=True)
+              for lo, hi in zip(bounds, bounds[1:]) if hi > lo]
+
+    got_state = _FakeGroupState(stored is not None, stored)
+    want_state = _FakeGroupState(stored is not None, stored)
+    (got,) = _reconcile_group((101,), iter(chunks), got_state)
+    (want,) = _reconcile_rowwise((101,), iter(chunks), want_state)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert repr(got_state.updated) == repr(want_state.updated)
+
+
 @given(st.data())
 @settings(max_examples=5, deadline=None)
 def test_asof_join_matches_brute_force(spark, data):

@@ -1679,3 +1679,95 @@ def test_checkpoint_default_resumes_with_crc_and_no_temp_files(spark, tmpdirs):
     assert not [
         f for _, _, fs in os.walk(ckpt) for f in fs if f.endswith(".tmp")
     ]
+
+
+def test_start_pipeline_sizes_state_partitions_and_resume_keeps_count(
+    spark, tmpdirs
+):
+    """start_pipeline gives a stream its share of the cores as shuffle
+    partitions, max(1, cores // 5): a new checkpoint records that count
+    and every stateful operator runs on it, and the session's own
+    spark.sql.shuffle.partitions is unchanged afterwards. A query resumed
+    from a checkpoint created at 4 partitions keeps 4 (its state is
+    hash-partitioned by that count) and still equals the batch twin."""
+    import json
+    import os
+
+    from cdc_stream_processor_spark.operators.pipelines import (
+        balance_reconciliation_batch,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    session_count = spark.conf.get(key)
+    rule = max(1, spark.sparkContext.defaultParallelism // 5)
+    assert SP.state_partitions(spark) == rule
+    t0 = 1_700_000_000
+
+    def txn(i, account, before, after, at_s):
+        return fx.envelope(fx.txn_image(
+            txn_id=float(i), account_id=float(account), balance_before=before,
+            balance_after=after, initiated_at_us=at_s * US))
+
+    first = [txn(1, 101, 100.0, 90.0, t0), txn(2, 102, 50.0, 40.0, t0 + 5),
+             txn(3, 101, 90.0, 70.0, t0 + 10), txn(4, 103, 10.0, 5.0, t0 + 10)]
+    # 101 claims 75 where 70 is stored; 102 matches its stored 40
+    second = [txn(5, 101, 75.0, 60.0, t0 + 60), txn(6, 102, 40.0, 35.0, t0 + 65),
+              txn(7, 104, 20.0, 20.0, t0 + 70)]
+    src = f"{tmpdirs}/src"
+    _write_envelopes(spark, src, first)
+
+    def balance():
+        return balance_reconciliation_stream(
+            SP.parsed_transaction_stream(SP.read_file_envelopes(spark, src)))
+
+    def recorded(ckpt):
+        """The count in every offset-log entry of the checkpoint."""
+        counts = set()
+        for batch in os.listdir(f"{ckpt}/offsets"):
+            if batch.isdigit():
+                with open(f"{ckpt}/offsets/{batch}") as f:
+                    counts.add(json.loads(f.read().splitlines()[1])["conf"][key])
+        return counts
+
+    def operator_counts(q):
+        return {op["numShufflePartitions"] for p in q.recentProgress
+                for op in p["stateOperators"]}
+
+    q = SP.start_pipeline(balance(), "balance_rule", f"{tmpdirs}/rule",
+                          output_mode="append", trigger_available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert spark.conf.get(key) == session_count
+    assert recorded(f"{tmpdirs}/rule/balance_rule") == {str(rule)}
+    assert operator_counts(q) == {rule}
+
+    ckpt, out = f"{tmpdirs}/resume", f"{tmpdirs}/out"
+    spark.conf.set(key, "4")
+    try:
+        q = (balance().writeStream.queryName("balance_resume")
+             .outputMode("append").format("parquet").option("path", out)
+             .option("checkpointLocation", f"{ckpt}/balance_resume")
+             .trigger(availableNow=True).start())
+    finally:
+        spark.conf.set(key, session_count)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    _write_envelopes(spark, src, second)
+    q = SP.start_pipeline(balance(), "balance_resume", ckpt,
+                          output_mode="append", sink_format="parquet",
+                          sink_options={"path": out},
+                          trigger_available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert spark.conf.get(key) == session_count
+    assert recorded(f"{ckpt}/balance_resume") == {"4"}
+    assert operator_counts(q) == {4}
+
+    cols = ["account_id", "transaction_id", "balance_before", "balance_after",
+            "discrepancy", "severity"]
+    got = sorted(tuple(r) for r in spark.read.parquet(out).select(cols).collect())
+    twin = sorted(tuple(r) for r in balance_reconciliation_batch(
+        cdc.parse_transactions(fx.make_txn_df(spark, first + second))
+    ).select(cols).collect())
+    assert got == twin
+    assert [(r[1], r[5]) for r in got if r[5] == "HIGH"] == [(5, "HIGH")]
