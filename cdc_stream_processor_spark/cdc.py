@@ -10,6 +10,10 @@ timestamps → TimestampType).
 Pure column expressions — the same functions work on batch DataFrames and
 streaming DataFrames (readStream + from_json/from_avro), so every pipeline
 has a batch twin for DuckDB-oracle checking.
+
+Decoding lives here too: ``parse_envelope_values`` (JSON) and
+``envelopes_from_avro`` (Avro) turn record values into envelopes, and
+every ingress path drops corrupt and non-envelope values by one rule.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_stream_processor_spark import schemas
 from cdc_stream_processor_spark.functions import (
     micros_to_ts,
     millis_to_ts,
@@ -303,6 +308,35 @@ def strip_confluent_framing(value_col: str = "value") -> F.Column:
     return F.expr(f"substring({value_col}, 6, length({value_col}) - 5)")
 
 
+def parse_envelope_values(
+    values: DataFrame, envelope_schema=schemas.TRANSACTION_ENVELOPE
+) -> DataFrame:
+    """JSON record value → envelope columns, with corrupt values DROPPED
+    (F2 semantics). The one JSON-to-envelope step: the Kafka JSON source
+    and both pure-Python Avro decoders (which re-emit each decoded record
+    as JSON) end here, so a corrupt or non-envelope value is dropped the
+    same way whatever its wire format.
+
+    Spark's from_json never errors in its default PERMISSIVE mode — a
+    malformed value yields a struct of ALL-NULL fields, not a NULL
+    struct (so a bare ``env.isNotNull()`` drops nothing), and so does a
+    well-formed record of another schema. Any non-``value`` columns (e.g.
+    the Kafka record timestamp) pass through untouched."""
+    extra = [c for c in values.columns if c != "value"]
+    parsed = values.select(
+        F.from_json(F.col("value").cast("string"), envelope_schema).alias("env"),
+        *[F.col(c) for c in extra],
+    )
+    return _drop_non_envelopes(parsed, extra)
+
+
+def _drop_non_envelopes(parsed: DataFrame, extra: list[str]) -> DataFrame:
+    """Keep rows whose ``env`` struct carries the envelope's mandatory
+    ``op`` discriminator: every Debezium change event has one, and a
+    corrupt or non-envelope value decodes to a null ``op``."""
+    return parsed.filter(F.col("env.op").isNotNull()).select("env.*", *extra)
+
+
 def envelopes_from_avro(
     raw: DataFrame,
     avro_schema_json: str | None = None,
@@ -318,15 +352,20 @@ def envelopes_from_avro(
     magic+schema-id header before decoding.  Two schema-resolution modes:
 
     - explicit writer schema: pass ``avro_schema_json`` (JVM ``from_avro``
-      path; requires the spark-avro package on the classpath, raises a
-      clear error otherwise).  Without the jar, the tested pure-Python
-      twin ``sources.avro_codec.envelopes_from_avro_py`` decodes the same
-      wire format with identical downstream semantics.
+      path).  Without the spark-avro jar on the classpath, Spark raises
+      ``AnalysisException`` [AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE] when
+      the plan is built.  The tested pure-Python twin
+      ``sources.avro_codec.envelopes_from_avro_py`` decodes the same wire
+      format with identical downstream semantics.
     - registry resolution: pass ``registry=`` (a
       ``sources.schema_registry.SchemaRegistry`` — Dict- or HTTP-backed)
       plus ``spark_envelope_schema``; the writer schema is then resolved
       PER RECORD from each frame's Confluent schema id, matching the
       reference's AvroSerdes exactly — no hand-passed schema JSON.
+
+    Both modes drop a value whose decoded ``op`` is null, as
+    :func:`parse_envelope_values` does: PERMISSIVE ``from_avro`` turns a
+    malformed value into a row of nulls.
     """
     if registry is not None:
         if spark_envelope_schema is None:
@@ -346,18 +385,12 @@ def envelopes_from_avro(
             "pass either avro_schema_json (explicit writer schema) or "
             "registry= (Confluent schema-id resolution)"
         )
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError as e:  # pragma: no cover
-        raise RuntimeError(
-            "envelopes_from_avro requires the spark-avro package "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
-        ) from e
+    from pyspark.sql.avro.functions import from_avro
+
     payload = F.col(value_col)
     if confluent_framed:
         payload = strip_confluent_framing(value_col)
-    return raw.select(
-        from_avro(payload, avro_schema_json, {"mode": "PERMISSIVE"}).alias(
-            "envelope"
-        )
-    ).select("envelope.*")
+    decoded = raw.select(
+        from_avro(payload, avro_schema_json, {"mode": "PERMISSIVE"}).alias("env")
+    )
+    return _drop_non_envelopes(decoded, [])

@@ -20,6 +20,7 @@ from cdc_stream_processor_spark.operators import similarity as S
 from cdc_stream_processor_spark.operators import text as X
 from cdc_stream_processor_spark.queries import QueryFn
 from cdc_stream_processor_spark.sources import batch as B
+from cdc_stream_processor_spark.sources import files as FS
 
 JACCARD_THRESHOLD = 0.5
 SIMHASH_MAX_HAMMING = 2  # word-soup test corpus clusters tightly; ≤2 keeps pairs meaningful
@@ -1677,10 +1678,14 @@ def _centroid_pair_sim_sql() -> str:
     )
     na = _FOLD_SUM.format(arr="list_transform(a.centroid, x -> x * x)")
     nb = _FOLD_SUM.format(arr="list_transform(b.centroid, x -> x * x)")
+    # +0.0 normalizes IEEE signed zero, as SQL_CDC_PARSE does: centroids
+    # whose exact dot product is 0 fold to a tiny negative cosine, which
+    # DuckDB's ROUND keeps as -0.0 and Spark's round (Java BigDecimal, no
+    # signed zero) returns as 0.0
     return f"""
 WITH cents AS ({SQL_EMBEDDING_CENTROIDS})
 SELECT a.label AS label_a, b.label AS label_b,
-       ROUND(({dot}) / (sqrt({na}) * sqrt({nb})), 6) AS cosine_sim
+       ROUND(({dot}) / (sqrt({na}) * sqrt({nb})), 6) + 0.0 AS cosine_sim
 FROM cents a JOIN cents b ON a.label < b.label
 """
 
@@ -2279,12 +2284,11 @@ def q_jsonl_dlq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.from_json(
             "line",
-            "doc_id long, text string, lang string, n_chars long,"
-            " _corrupt_record string",
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
+            FS._with_corrupt("doc_id long, text string, lang string, n_chars long"),
+            FS.PERMISSIVE_OPTIONS,
         ).alias("r"),
     )
-    is_bad = F.col("r._corrupt_record").isNotNull()
+    is_bad = F.col(f"r.{FS.CORRUPT_COL}").isNotNull()
     return (
         parsed.groupBy("source")
         .agg(

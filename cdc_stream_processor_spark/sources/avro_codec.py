@@ -16,18 +16,18 @@ schema forms the CDC envelopes use:
 Logical/connect annotations (MicroTimestamp etc.) ride on the underlying
 primitive and are left untouched — exactly how Debezium emits them.
 
-The decoder runs inside an Arrow-batched ``mapInPandas`` (one Python pass
-per batch of Kafka values — no row-at-a-time UDF), emits the envelope as a
-JSON string, and hands it to the SAME ``from_json`` + filter path the JSON
-serde uses, so all downstream parsing/tests are shared between the two wire
-formats.
+The decoder (``_decode_envelopes``) runs inside an Arrow-batched
+``mapInPandas`` (one Python pass per batch of Kafka values — no
+row-at-a-time UDF), emits the envelope as a JSON string, and hands it to
+the SAME ``cdc.parse_envelope_values`` step the JSON serde uses, so all
+downstream parsing/tests are shared between the two wire formats.
 """
 
 from __future__ import annotations
 
 import json
 import struct
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 CONFLUENT_HEADER_LEN = 5  # 0x00 magic + 4-byte big-endian schema id
 
@@ -208,40 +208,61 @@ def envelopes_from_avro_py(
     value_col: str = "value",
     confluent_framed: bool = True,
 ):
-    """Jar-free F1 path: binary Kafka values → envelope rows.
+    """Jar-free F1 path: binary Kafka values → envelope rows, every value
+    decoded against one writer schema (after skipping the 5-byte
+    Confluent header when ``confluent_framed``). Works on batch and
+    streaming DataFrames alike; see ``_decode_envelopes``."""
+    schema = json.loads(avro_schema_json)
+    offset = CONFLUENT_HEADER_LEN if confluent_framed else 0
+    return _decode_envelopes(
+        raw, lambda frame: (schema, frame[offset:]), spark_envelope_schema, value_col
+    )
 
-    Arrow-batched mapInPandas decodes each value against the writer schema
-    and re-emits the envelope as JSON; the result flows through the same
-    PERMISSIVE ``from_json`` used by the JSON serde, so corrupt payloads
-    degrade to null envelopes (F2 log-and-continue semantics) instead of
-    failing the query. Works on batch and streaming DataFrames alike.
+
+def _decode_envelopes(
+    raw,
+    resolve: Callable[[bytes], tuple[Any, bytes]],
+    spark_envelope_schema,
+    value_col: str,
+):
+    """The Python Avro decoder behind both jar-free F1 paths.
+
+    ``resolve`` maps one frame to (parsed writer schema, Avro body); the
+    fixed-schema and registry paths differ only there. An Arrow-batched
+    mapInPandas decodes each value and re-emits it as JSON, which goes
+    through ``cdc.parse_envelope_values``, the step the JSON serde uses,
+    so corrupt and non-envelope values are dropped (F2 log-and-continue)
+    instead of failing the query.
+
+    Only DATA-shaped failures take the drop path (bad framing, schema id
+    missing from the registry, malformed Avro or schema JSON);
+    infrastructure failures (registry unreachable, HTTP 5xx —
+    ``OSError``/``URLError``) PROPAGATE so the task fails and Spark
+    retries, as the reference's AvroSerdes lets resolver failures bubble
+    rather than silently dropping valid records.
     """
     import pandas as pd
     from pyspark.sql import functions as F
 
-    schema = json.loads(avro_schema_json)
-    offset = CONFLUENT_HEADER_LEN if confluent_framed else 0
+    from cdc_stream_processor_spark import cdc
 
     def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for v in pdf[value_col]:
                 try:
-                    rec = decode_record(schema, bytes(v)[offset:])
-                    out.append(json.dumps(rec))
+                    schema, body = resolve(bytes(v))
+                    out.append(json.dumps(decode_record(schema, body)))
                 except (
-                    ValueError,  # malformed Avro / bad utf-8
+                    ValueError,  # bad framing / malformed Avro / bad schema JSON
+                    LookupError,  # id absent from registry; varint off the buffer
                     TypeError,  # null / non-bytes value cell
-                    struct.error,  # truncated primitive
-                    IndexError,  # varint runs off the buffer
-                ):  # data-shaped corruption → null envelope downstream
+                    struct.error,  # truncated Avro primitive
+                ):
                     out.append(None)
-            yield pd.DataFrame({"_json": pd.Series(out, dtype="object")})
+            yield pd.DataFrame({"value": pd.Series(out, dtype="object")})
 
     decoded = raw.select(F.col(value_col)).mapInPandas(
-        decode_batch, schema="_json string"
+        decode_batch, schema="value string"
     )
-    parsed = decoded.select(
-        F.from_json(F.col("_json"), spark_envelope_schema).alias("env")
-    )
-    return parsed.filter(F.col("env").isNotNull()).select("env.*")
+    return cdc.parse_envelope_values(decoded, spark_envelope_schema)

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
+# reader / from_json options: malformed input lands in CORRUPT_COL
+PERMISSIVE_OPTIONS = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
 
 
 def _with_corrupt(schema: str | T.StructType) -> T.StructType:
@@ -44,9 +46,9 @@ def read_jsonl(
 ) -> DataFrame:
     """JSON-lines with explicit schema; malformed lines quarantine in
     _corrupt_record (PERMISSIVE)."""
-    return spark.read.schema(_with_corrupt(schema)).option(
-        "mode", "PERMISSIVE"
-    ).option("columnNameOfCorruptRecord", CORRUPT_COL).json(path)
+    return spark.read.schema(_with_corrupt(schema)).options(
+        **PERMISSIVE_OPTIONS
+    ).json(path)
 
 
 def read_csv(
@@ -60,8 +62,7 @@ def read_csv(
     _corrupt_record (PERMISSIVE)."""
     return (
         spark.read.schema(_with_corrupt(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+        .options(**PERMISSIVE_OPTIONS)
         .option("header", str(header).lower())
         .option("delimiter", delimiter)
         .csv(path)
@@ -98,10 +99,8 @@ def read_jsonl_stream(
     File sources need an explicit schema anyway (no streaming inference),
     which the loaders here already require; maxFilesPerTrigger bounds
     per-micro-batch work for backfill directories."""
-    reader = (
-        spark.readStream.schema(_with_corrupt(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+    reader = spark.readStream.schema(_with_corrupt(schema)).options(
+        **PERMISSIVE_OPTIONS
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -17,7 +17,7 @@ resolution step for the Spark engine, pluggable and offline-testable:
 
 Resolution happens PER RECORD inside the Arrow batch decoder (ids can
 change mid-topic under schema evolution — exactly the case the registry
-exists for), against a per-process cache, so the scale cost is one dict
+exists for), against a per-task cache, so the scale cost is one dict
 probe per value.
 """
 
@@ -25,11 +25,11 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Any, Iterator, Protocol
+from typing import Any, Protocol
 
 from cdc_stream_processor_spark.sources.avro_codec import (
     CONFLUENT_HEADER_LEN,
-    decode_record,
+    _decode_envelopes,
 )
 
 
@@ -121,56 +121,18 @@ def envelopes_from_avro_registry(
     schema id — no hand-passed schema JSON (closes the reference's
     AvroSerdes.java:35-44 gap).
 
-    Same execution shape as ``envelopes_from_avro_py``: Arrow-batched
-    mapInPandas decode → JSON → PERMISSIVE from_json, so corrupt frames
-    and unknown schema ids degrade to dropped null envelopes (F2
-    log-and-continue), and the plan works identically on batch and
-    streaming inputs.  Parsed writer schemas are cached per executor
-    process (keyed by id), so resolution is one dict probe per value.
-
-    Only DATA-shaped failures take the corrupt-drop path (bad framing,
-    id missing from the registry, malformed Avro/JSON); infrastructure
-    failures (registry unreachable, HTTP 5xx — ``OSError``/``URLError``)
-    PROPAGATE so the task fails and Spark retries, matching the
-    reference's AvroSerdes, which lets resolver failures bubble rather
-    than silently dropping valid records.
+    The same decoder as ``envelopes_from_avro_py`` (``avro_codec``), so
+    corrupt frames and unknown schema ids are dropped the same way while
+    registry infrastructure failures propagate. Parsed writer schemas are
+    cached per decode task (keyed by id), so resolution is one dict probe
+    per value.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    parsed: dict[int, Any] = {}
 
-    def decode_batch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        parsed_cache: dict[int, Any] = {}
-        for pdf in batches:
-            out = []
-            for v in pdf[value_col]:
-                try:
-                    frame = bytes(v)
-                    sid = extract_schema_id(frame)
-                    schema = parsed_cache.get(sid)
-                    if schema is None:
-                        schema = json.loads(registry.get_schema(sid))
-                        parsed_cache[sid] = schema
-                    rec = decode_record(
-                        schema, frame[CONFLUENT_HEADER_LEN:]
-                    )
-                    out.append(json.dumps(rec))
-                except (
-                    ValueError,  # bad framing / malformed Avro / bad schema JSON
-                    LookupError,  # id absent from offline registry
-                    TypeError,  # null / non-bytes value cell
-                    struct.error,  # truncated Avro primitive
-                    IndexError,  # varint runs off the buffer
-                ):  # data-shaped corruption → null envelope; infra errors
-                    # (OSError/URLError from HttpSchemaRegistry) propagate
-                    out.append(None)
-            yield pd.DataFrame({"_json": pd.Series(out, dtype="object")})
+    def resolve(frame: bytes) -> tuple[Any, bytes]:
+        sid = extract_schema_id(frame)
+        if sid not in parsed:
+            parsed[sid] = json.loads(registry.get_schema(sid))
+        return parsed[sid], frame[CONFLUENT_HEADER_LEN:]
 
-    decoded = raw.select(F.col(value_col)).mapInPandas(
-        decode_batch, schema="_json string"
-    )
-    parsed = decoded.select(
-        F.from_json(F.col("_json"), spark_envelope_schema).alias("env")
-    )
-    return parsed.filter(F.col("env").isNotNull()).select("env.*")
+    return _decode_envelopes(raw, resolve, spark_envelope_schema, value_col)

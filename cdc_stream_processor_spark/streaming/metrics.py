@@ -21,13 +21,16 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from cdc_stream_processor_spark.streaming.lifecycle import _progress_summary
+
 
 class ProgressRecorder(StreamingQueryListener):
     """Collects per-batch progress for all queries (or one by name).
 
     Thread-safe: the listener bus invokes callbacks from its own thread.
     ``metrics_df()`` snapshots the collected rows as a DataFrame with one
-    row per (query, batch).
+    row per (query, batch): the query name plus the same progress summary
+    ``/healthz`` reports (``lifecycle._progress_summary``).
     """
 
     def __init__(self, query_name: str | None = None) -> None:
@@ -43,17 +46,7 @@ class ProgressRecorder(StreamingQueryListener):
         p = event.progress
         if self._query_name and p.name != self._query_name:
             return
-        row = {
-            "query_name": p.name or "",
-            "batch_id": int(p.batchId),
-            "num_input_rows": int(p.numInputRows),
-            "batch_duration_ms": int(
-                json.loads(p.json).get("batchDuration", 0)
-            ),
-            "state_rows_total": sum(
-                int(op.numRowsTotal) for op in p.stateOperators
-            ),
-        }
+        row = {"query_name": p.name or "", **_progress_summary(json.loads(p.json))}
         with self._lock:
             self._rows.append(row)
 
@@ -68,9 +61,9 @@ class ProgressRecorder(StreamingQueryListener):
         with self._lock:
             rows = list(self._rows)
         schema = (
-            "query_name string, batch_id long, num_input_rows long, "
-            "batch_duration_ms long, state_rows_total long"
+            "query_name string, batch_id long, timestamp string, "
+            "num_input_rows long, input_rows_per_second double, "
+            "processed_rows_per_second double, batch_duration_ms long, "
+            "state_rows_total long"
         )
-        return spark.createDataFrame(rows, schema) if rows else (
-            spark.createDataFrame([], schema)
-        )
+        return spark.createDataFrame(rows, schema)

@@ -30,10 +30,10 @@ from cdc_stream_processor_spark import cdc, schemas
 from cdc_stream_processor_spark.functions import (
     format_amount,
     format_timestamp_lagos,
-    is_debit,
     lagos_date,
 )
 from cdc_stream_processor_spark.operators import pipelines as P
+from cdc_stream_processor_spark.sources import files
 from cdc_stream_processor_spark.streaming.state import balance_reconciliation_stream
 
 # Kafka topics (reference ABBankStreamsConfig.java:19-28)
@@ -73,31 +73,9 @@ def read_kafka_envelopes(
     for k, v in (source_options or {}).items():
         reader = reader.option(k, v)
     raw = reader.load()
-    return parse_envelope_values(
+    return cdc.parse_envelope_values(
         raw.select(F.col("value"), F.col("timestamp").alias("_kafka_ts"))
     )
-
-
-def parse_envelope_values(values: DataFrame) -> DataFrame:
-    """JSON record value → envelope columns, with corrupt values DROPPED
-    (F2 semantics). Shared by the Kafka source and its broker-free serde
-    test, so the serialization contract is proven in any environment.
-
-    Spark's from_json never errors in its default PERMISSIVE mode — a
-    malformed value yields a struct of ALL-NULL fields, not a NULL
-    struct (so a bare ``env.isNotNull()`` drops nothing). The drop
-    filter therefore keys on the envelope's mandatory ``op``
-    discriminator: every Debezium change event carries one, and a
-    corrupt parse leaves it null. Any non-``value`` columns (e.g. the
-    Kafka record timestamp) pass through untouched."""
-    extra = [c for c in values.columns if c != "value"]
-    parsed = values.select(
-        F.from_json(
-            F.col("value").cast("string"), schemas.TRANSACTION_ENVELOPE
-        ).alias("env"),
-        *[F.col(c) for c in extra],
-    )
-    return parsed.filter(F.col("env.op").isNotNull()).select("env.*", *extra)
 
 
 def read_file_envelopes(
@@ -112,8 +90,6 @@ def read_file_envelopes(
     batches by (mtime, path) — which is what advances the watermark
     incrementally, the way a live Kafka feed would)."""
     reader = spark.readStream.format(fmt).schema(schemas.TRANSACTION_ENVELOPE)
-    if fmt == "json":
-        reader = reader.option("mode", "PERMISSIVE")
     for k, v in (source_options or {}).items():
         reader = reader.option(k, v)
     return reader.load(path)
@@ -581,30 +557,20 @@ def read_file_envelopes_with_dlq(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
     """JSON envelope stream split into (valid, dead-letter): corrupt lines
-    are preserved verbatim in the `_corrupt` column and routed to a
-    quarantine stream instead of being silently nulled away — drop-corrupt
-    (F2) keeps pipelines alive, but a production ingest also needs the
-    rejects auditable/replayable once the producer bug is fixed. PERMISSIVE
-    mode + columnNameOfCorruptRecord is the stock Spark mechanism; no UDF.
+    are preserved verbatim and routed to a quarantine stream instead of
+    being silently nulled away — drop-corrupt (F2) keeps pipelines alive,
+    but a production ingest also needs the rejects auditable/replayable
+    once the producer bug is fixed. Reads through
+    ``files.read_jsonl_stream``, the PERMISSIVE + corrupt-column reader of
+    every JSONL loader; no UDF.
     """
-    from pyspark.sql import types as T
-
-    schema_with_corrupt = T.StructType(
-        list(schemas.TRANSACTION_ENVELOPE.fields)
-        + [T.StructField("_corrupt", T.StringType())]
-    )
-    raw = (
-        spark.readStream.format("json")
-        .schema(schema_with_corrupt)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .load(path)
-    )
-    valid = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
+    raw = files.read_jsonl_stream(spark, path, schemas.TRANSACTION_ENVELOPE)
+    corrupt = F.col(files.CORRUPT_COL)
+    valid = raw.filter(corrupt.isNull()).drop(files.CORRUPT_COL)
     # Spark refuses a scan whose projection is ONLY the corrupt column
     # (populated lazily alongside parsed fields), so the quarantine carries
     # one parsed column too — null for rejects, and it documents op anyway
-    dead = raw.filter(F.col("_corrupt").isNotNull()).select(
-        F.col("_corrupt").alias("raw_record"), F.col("op")
+    dead = raw.filter(corrupt.isNotNull()).select(
+        corrupt.alias("raw_record"), F.col("op")
     )
     return valid, dead

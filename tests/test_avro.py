@@ -315,3 +315,85 @@ def test_envelopes_from_avro_requires_schema_or_registry(spark):
         cdc.envelopes_from_avro(raw)
     with pytest.raises(ValueError, match="spark_envelope_schema"):
         cdc.envelopes_from_avro(raw, registry=object())
+
+
+KEY_SCHEMA = {
+    "type": "record",
+    "name": "Key",
+    "fields": [{"name": "TRANSACTION_ID", "type": "double"}],
+}
+
+
+def test_envelope_decoders_agree_and_drop_non_envelopes(spark):
+    """One drop rule on every ingress path: an insert, a delete, a corrupt
+    value and a decodable record of a NON-envelope schema (the topic's key
+    schema, under its own schema id) give the same envelope rows through
+    the Kafka JSON step, the fixed-schema Python Avro decoder, registry
+    resolution and, where the jar is shipped, JVM from_avro. The
+    non-envelope record parses to an all-null struct, so only a drop keyed
+    on ``op`` removes it."""
+    from cdc_stream_processor_spark.sources import schema_registry as SR
+
+    insert = _envelope(_image(1.0, 600_000.0))
+    delete = {"before": _image(2.0), "after": None, "op": "d", "ts_ms": 1,
+              "snapshot": "false"}
+    key = {"TRANSACTION_ID": 3.0}
+    env_frames = [
+        AC.encode_record(ENVELOPE_SCHEMA, r, confluent_schema_id=7)
+        for r in (insert, delete)
+    ]
+    key_frame = AC.encode_record(KEY_SCHEMA, key, confluent_schema_id=8)
+    corrupt = b"\x00\x00\x00\x00\x07\x01\x02 not avro"
+
+    def frames(blobs):
+        return spark.createDataFrame(
+            [(bytearray(b),) for b in blobs], "value binary"
+        )
+
+    def fixed_py(blobs, schema):
+        return AC.envelopes_from_avro_py(
+            frames(blobs), json.dumps(schema), schemas.TRANSACTION_ENVELOPE
+        )
+
+    def envelope_rows(envs):
+        return sorted(
+            (r.asDict(recursive=True) for r in envs.collect()),
+            key=lambda r: str(r["op"]),
+        )
+
+    json_values = spark.createDataFrame(
+        [(json.dumps(r),) for r in (insert, delete, key)] + [("{not json",)],
+        "value string",
+    )
+    want = envelope_rows(cdc.parse_envelope_values(json_values))
+    assert [r["op"] for r in want] == ["c", "d"]
+    assert want[0]["after"]["AMOUNT"] == 600_000.0
+
+    # a fixed-schema consumer decodes every value with one writer schema,
+    # so the key record comes through a reader of its own schema
+    got_py = fixed_py(env_frames + [corrupt], ENVELOPE_SCHEMA).union(
+        fixed_py([key_frame], KEY_SCHEMA)
+    )
+    registry = SR.DictSchemaRegistry(
+        {7: json.dumps(ENVELOPE_SCHEMA), 8: json.dumps(KEY_SCHEMA)}
+    )
+    got_registry = cdc.envelopes_from_avro(
+        frames(env_frames + [key_frame, corrupt]),
+        registry=registry,
+        spark_envelope_schema=schemas.TRANSACTION_ENVELOPE,
+    )
+    assert envelope_rows(got_py) == want
+    assert envelope_rows(got_registry) == want
+
+    if _jvm_avro_available(spark):
+        # from_avro yields the writer schema's own struct, so compare the
+        # fields both schemas carry
+        got_jvm = cdc.envelopes_from_avro(
+            frames(env_frames + [corrupt]),
+            json.dumps(ENVELOPE_SCHEMA),
+            confluent_framed=True,
+        )
+        cols = ["op", "ts_ms", "before.TRANSACTION_ID", "after.TRANSACTION_ID"]
+        assert sorted(got_jvm.select(cols).collect()) == sorted(
+            got_registry.select(cols).collect()
+        )

@@ -353,14 +353,20 @@ def test_scalar_format_amount(spark):
 
 
 def test_envelopes_from_avro_gated_without_package(spark):
-    """spark-avro isn't bundled here; the gate must raise a clear error
-    (AnalysisException from the unloaded data source) rather than silently
-    misparse."""
+    """Without the spark-avro jar the JVM path must raise Spark's own clear
+    error (AnalysisException from the unloaded data source) rather than
+    silently misparse. Skipped where the jar is on the classpath."""
     import pytest
+    from pyspark.errors import AnalysisException
 
     from cdc_stream_processor_spark import cdc
+    from tests.test_avro import _jvm_avro_available
 
+    if _jvm_avro_available(spark):
+        pytest.skip("spark-avro jar on classpath")
     raw = spark.createDataFrame([(bytearray(b"\x00\x00\x00\x00\x01x"),)], "value binary")
     schema = '{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}'
-    with pytest.raises(Exception, match="[Aa]vro"):
+    with pytest.raises(Exception, match="[Aa]vro") as ei:
         cdc.envelopes_from_avro(raw, schema, confluent_framed=True).collect()
+    assert isinstance(ei.value, AnalysisException)
+    assert ei.value.getCondition() == "AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE"

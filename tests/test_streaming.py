@@ -12,7 +12,7 @@ import tempfile
 
 import pytest
 
-from cdc_stream_processor_spark import cdc, schemas
+from cdc_stream_processor_spark import cdc
 from cdc_stream_processor_spark.streaming import pipelines as SP
 from cdc_stream_processor_spark.streaming.state import balance_reconciliation_stream
 from tests import fixtures as fx
@@ -675,7 +675,7 @@ def test_envelope_json_value_roundtrip_matches_kafka_serde(spark):
     ]
     df = fx.make_txn_df(spark, envs)
     values = df.select(F.to_json(F.struct("*")).alias("value"))
-    parsed_back = SP.parse_envelope_values(values)
+    parsed_back = cdc.parse_envelope_values(values)
     want = [r.asDict(recursive=True) for r in cdc.parse_transactions(df).collect()]
     got = [
         r.asDict(recursive=True)
@@ -690,7 +690,7 @@ def test_envelope_json_value_roundtrip_matches_kafka_serde(spark):
     ).union(
         values.limit(1).select("value", F.lit(9).alias("_kafka_off"))
     )
-    kept = SP.parse_envelope_values(mixed)
+    kept = cdc.parse_envelope_values(mixed)
     assert kept.count() == 1
     row = kept.select("_kafka_off", "op").first()
     assert (row["_kafka_off"], row["op"]) == (9, "c")
@@ -1274,6 +1274,7 @@ def test_progress_recorder_captures_batch_metrics(spark, tmpdirs):
     reference's streams observability."""
     from pyspark.sql import types as T
 
+    from cdc_stream_processor_spark.streaming.lifecycle import _progress_summary
     from cdc_stream_processor_spark.streaming.metrics import ProgressRecorder
 
     src, ckpt = f"{tmpdirs}/met_src", f"{tmpdirs}/met_ckpt"
@@ -1307,6 +1308,9 @@ def test_progress_recorder_captures_batch_metrics(spark, tmpdirs):
         m = rec.metrics_df(spark).collect()
         assert sum(r["num_input_rows"] for r in m) == 25
         assert all(r["query_name"] == "metered" for r in m)
+        # the metrics table carries the /healthz progress summary
+        summary = _progress_summary(q.lastProgress)
+        assert list(m[-1].asDict()) == ["query_name", *summary]
     finally:
         spark.streams.removeListener(rec)
 
