@@ -1136,6 +1136,8 @@ def _embedding_outliers_sql() -> str:
     )
     nv = _FOLD_SUM.format(arr="list_transform(v.v, x -> x * x)")
     nc = _FOLD_SUM.format(arr="list_transform(c.centroid, x -> x * x)")
+    # + 0.0 normalizes signed zero, as in _centroid_pair_sim_sql: a vector
+    # orthogonal to its centroid folds to a tiny negative cosine
     return f"""
 WITH cents AS ({SQL_EMBEDDING_CENTROIDS}),
 v AS (
@@ -1143,7 +1145,7 @@ v AS (
   FROM embeddings
 ), scored AS (
   SELECT v.label, v.vec_id,
-         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) AS centroid_sim
+         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) + 0.0 AS centroid_sim
   FROM v JOIN cents c USING (label)
 )
 SELECT label, vec_id, centroid_sim, rank FROM (
@@ -1168,6 +1170,7 @@ def _centroid_assign_sql() -> str:
     )
     nv = _FOLD_SUM.format(arr="list_transform(v.v, x -> x * x)")
     nc = _FOLD_SUM.format(arr="list_transform(c.centroid, x -> x * x)")
+    # + 0.0 normalizes signed zero, as in _centroid_pair_sim_sql
     return f"""
 WITH cents AS ({SQL_EMBEDDING_CENTROIDS}),
 v AS (
@@ -1175,7 +1178,7 @@ v AS (
   FROM embeddings
 ), scored AS (
   SELECT v.vec_id, c.label,
-         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) AS sim
+         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) + 0.0 AS sim
   FROM v CROSS JOIN cents c
 )
 SELECT vec_id, label AS assigned_label, sim FROM scored

@@ -5330,6 +5330,17 @@ _PAR_EMB_QUERIES = (
         ([4, 0, 2, 2], 2),
     ]
 )
+# vec 3 of label 2 is orthogonal to its centroid: the same -0.0 / 0.0
+# split in embedding_outliers' centroid_sim.
+@example(
+    rows=[
+        ([0, 0, 0, 0], 0),
+        ([0, 0, 0, 0], 0),
+        ([0, 0, -3, -4], 2),
+        ([0, 0, 2, 5], 2),
+        ([0, 0, -4, 1], 2),
+    ]
+)
 @settings(max_examples=_PARITY_EXAMPLES or 5, deadline=None)
 def test_embedding_queries_cross_engine_parity_random(spark, rows):
     """Random fixed-dim integer-grid embeddings — including ZERO vectors
